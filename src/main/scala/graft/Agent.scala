@@ -4,6 +4,7 @@ import java.nio.file.{Files, LinkOption, Paths}
 
 import graft.config.A2Config
 import graft.ingest.{AuditIngest, SettleGate}
+import graft.plans.GraftExtensions
 import graft.sinks.ShipSinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -54,8 +55,10 @@ object Agent {
       case _ => Some(SettleGate.PsChecker)
     }
 
-  /** Launch the full pipeline against an existing session. The watched
-    * dir must exist (reference exit-4 check, OraaudKafka.java:152-173).
+  /** Launch the full pipeline against an existing session, installing
+    * the graft kernels on it first (a no-op when the session was built
+    * with the extension). The watched dir must exist (reference exit-4
+    * check, OraaudKafka.java:152-173).
     *
     * `kinesisTransport` is the offline KPL stand-in (R12 seam): it
     * receives the conditional-gzip (key, value BINARY) frame per batch;
@@ -67,6 +70,7 @@ object Agent {
       cfg: A2Config,
       kinesisTransport: Option[(DataFrame, Long) => Unit] = None): Running = {
 
+    GraftExtensions.install(spark)
     val watched = Paths.get(cfg.watchedPath)
     require(Files.exists(watched, LinkOption.NOFOLLOW_LINKS) && Files.isDirectory(watched),
       s"a2.watched.path '${cfg.watchedPath}' is not an existing directory") // exit 4

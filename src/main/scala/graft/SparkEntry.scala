@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.GraftExtensions
 import graft.queries.Catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,12 +11,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    GraftExtensions.install(spark)
     Catalog.all("q01_agg").build(spark, "/root/testdata/sf0.001")
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each builder
+    * installs the graft kernels first, so any session works.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Catalog.all.map { case (name, q) => name -> q.build }
+    Catalog.all.map { case (name, q) =>
+      name -> { (s: SparkSession, d: String) =>
+        GraftExtensions.install(s)
+        q.build(s, d)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted entries get a rows-only check.

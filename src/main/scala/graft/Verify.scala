@@ -11,9 +11,10 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // a plain session, no GraftExtensions: SparkEntry's builders install
+    // the kernels, so this dump also covers the plain-session path
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       // keep TypedImperative aggregates (collectCapped posting lists) in
       // the hash regime — see the same setting in Bench.scala

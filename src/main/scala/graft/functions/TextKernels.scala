@@ -232,13 +232,12 @@ object TextKernels {
     * token position i in [0, n−spanTokens], if the anchor token's
     * 16-bit md5-prefix hash ≡ 0 (mod anchorMod), emit
     * struct(i, h = 60-bit md5-prefix hash of the spanTokens-token
-    * window joined with ' '). Bit-identical to the HOF formulation in
-    * Pipeline.spanWindowsPos (filter over sequence + per-anchor
-    * md5(array_join(slice))), which paid an INTERPRETED md5 eval per
-    * token position (filter is CodegenFallback) on a corpus-grain scan
-    * stage (q123/q126/q247 span index + spanGate). Docs with fewer
-    * than spanTokens tokens return the empty array — exactly the rows
-    * the HOF path's n ≥ spanTokens filter dropped.
+    * window joined with ' '). Bit-identical to the HOF formulation it
+    * replaced (filter over sequence + per-anchor md5(array_join(slice))),
+    * which paid an INTERPRETED md5 eval per token position (filter is
+    * CodegenFallback) on a corpus-grain scan stage (q123/q126/q247 span
+    * index + spanGate); the DuckDB oracles keep that formulation. Docs
+    * with fewer than spanTokens tokens return the empty array.
     */
   def spanWindows(text: UTF8String, spanTokens: Int, anchorMod: Int): ArrayData = {
     val toks = text.toString.split(" ", -1)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expressions for the vector-math hot path (SURVEY.md
   * §2.2 Q41). The higher-order-function formulation
-  * (`zip_with`+`aggregate`, kept in [[VectorFns]] as `*Hof` for
+  * (`zip_with`+`aggregate`, kept in test scope as `HofRefs.*Hof` for
   * cross-checks) evaluates interpreted lambdas per element; these
   * generate a tight primitive loop inside whole-stage codegen instead —
   * the difference is the ANN scan cost at 100 TB.

@@ -1,14 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `array<float>` embedding columns. The default
-  * entry points call the native codegen expressions (VectorExpressions,
-  * registered by [[graft.plans.GraftExtensions]]); the higher-order-
-  * function formulations are kept as `*Hof` — same sequential left-fold
-  * summation order in both (and in DuckDB's `list_dot_product`), so all
-  * three produce bit-identical doubles.
+/** Vector math over `array<float>` embedding columns, through the native
+  * codegen expressions (VectorExpressions, installed by
+  * [[graft.plans.GraftExtensions]]). They fold left in the same order as
+  * DuckDB's `list_dot_product`, so both engines produce bit-identical
+  * doubles.
   */
 object VectorFns {
 
@@ -17,34 +16,11 @@ object VectorFns {
     */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  /** True iff the session has the native expressions registered (via
-    * [[graft.plans.GraftExtensions]]). Sessions built without the
-    * extension fall back to the bit-identical HOF formulation.
-    */
-  def nativeAvailable(s: SparkSession): Boolean =
-    s.catalog.functionExists("graft_cosine")
-
-  /** Dot product — native single-pass codegen expression when
-    * registered, HOF fallback otherwise.
-    */
-  def dot(s: SparkSession, a: Column, b: Column): Column =
-    if (nativeAvailable(s)) call_function("graft_dot", a, b) else dotHof(a, b)
+  /** Dot product — native single-pass codegen expression. */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** Cosine similarity; callers are expected to pass toDouble()'d
     * arrays.
     */
-  def cosine(s: SparkSession, a: Column, b: Column): Column =
-    if (nativeAvailable(s)) call_function("graft_cosine", a, b) else cosineHof(a, b)
-
-  /** Dot product via zip_with + left-fold aggregate (interpreted HOF
-    * reference formulation, used by specs to cross-check the native
-    * expression bit-for-bit).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def l2NormHof(v: Column): Column = sqrt(dotHof(v, v))
-
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (l2NormHof(a) * l2NormHof(b))
+  def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
 }

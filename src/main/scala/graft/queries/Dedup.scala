@@ -29,7 +29,7 @@ object Dedup {
   val BandRows = 4                       // 8 bands × 4 rows
   val NumBands: Int = NumHashes / BandRows
   /** Canonical permutation constants — defined next to the native kernel
-    * so the codegen path, HOF fallback, and DuckDB oracle all share them.
+    * so the codegen path and the DuckDB oracle share them.
     */
   val seeds: IndexedSeq[(Long, Long)] = graft.functions.TextKernels.seeds
 
@@ -44,19 +44,13 @@ object Dedup {
   val EmbBands = 12
   val EmbNumPlanes: Int = EmbBands * EmbBandBits
 
-  private def native(s: SparkSession): Boolean =
-    s.catalog.functionExists("graft_shingles3")
-
   /** Bucket truncation: the `cap` smallest elements of the group,
-    * ascending. Native path is the bounded-heap aggregate (buffers never
-    * exceed `cap` — a mega-bucket costs what a full bucket costs, the
-    * 100 TB guard); fallback is the bit-identical compositional form,
-    * whose buffer is O(bucket) before the slice.
+    * ascending, via the bounded-heap aggregate (buffers never exceed
+    * `cap` — a mega-bucket costs what a full bucket costs, the 100 TB
+    * guard).
     */
-  private def collectCapped(s: SparkSession, e: Column, cap: Int): Column =
-    if (s.catalog.functionExists("graft_collect_capped"))
-      call_function("graft_collect_capped", e, lit(cap))
-    else slice(sort_array(collect_list(e)), 1, cap)
+  private def collectCapped(e: Column, cap: Int): Column =
+    call_function("graft_collect_capped", e, lit(cap))
 
   /** Engaged-cap telemetry: the capped collectors silently truncate when
     * a bucket overflows, which a production run at 100 TB needs to SEE
@@ -125,14 +119,10 @@ object Dedup {
     * string formulation materialized every shingle as a UTF8String,
     * exploded the string stream, and md5-digested each shingle once
     * per consumer (twice in q41: signature + verification set).
-    * Bit-identical HOF fallback when the extensions aren't registered.
     */
-  private def shingledReps(s: SparkSession, groups: DataFrame): DataFrame = {
-    val hs = if (native(s)) call_function("graft_shingles3_h60", col("text"))
-             else transform(shingles3(col("text")), x => hash60(x))
-    groups.select(col("doc_id"), hs.as("hs"))
+  private def shingledReps(groups: DataFrame): DataFrame =
+    groups.select(col("doc_id"), call_function("graft_shingles3_h60", col("text")).as("hs"))
       .filter(size(col("hs")) > 0)
-  }
 
   /** Expand rep-level near-dup pairs (doc_a, doc_b, score) to member
     * level: the cross product of the two member lists per inter-group
@@ -168,7 +158,7 @@ object Dedup {
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"), col("score"))
     val intra = membership.filter(size(col("ids")) > 1 && col("eligible"))
-      .select(explode(sortedPairs(groups.sparkSession, col("ids"))).as("p"))
+      .select(explode(sortedPairs(col("ids"))).as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"),
         selfScore.as("score"))
     inter.unionByName(intra)
@@ -183,17 +173,8 @@ object Dedup {
     * Elements may be structs (doc_id first so the sort orders by id);
     * carrying the shingle payload through lets verification run join-free.
     */
-  private[queries] def sortedPairs(s: SparkSession, ids: Column): Column =
-    if (native(s)) call_function("graft_pairs", ids) else sortedPairsHof(ids)
-
-  /** Bit-identical HOF fallback for sessions without the extensions
-    * (HigherOrderFunctions are CodegenFallback — interpreted lambda
-    * dispatch per posting; the native kernel is the hot path).
-    */
-  private[graft] def sortedPairsHof(ids: Column): Column =
-    flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + lit(2), size(ids)),
-        y => struct(x.as("a"), y.as("b")))))
+  private[queries] def sortedPairs(ids: Column): Column =
+    call_function("graft_pairs", ids)
 
   /** Shared DuckDB CTE prefix: tokenize → distinct 3-shingles per doc. */
   private val shingleCte =
@@ -208,30 +189,12 @@ object Dedup {
       |  FROM tok
       |  QUALIFY lead(w,2) OVER (PARTITION BY doc_id ORDER BY i) IS NOT NULL)""".stripMargin
 
-  /** q42/q45's shared fingerprint: documents → (doc_id, simhash BIGINT,
-    * 32 bits used). Native zero-shuffle scalar kernel when registered;
-    * the relational form (two map-side-combined group-bys) is the
-    * bit-identical fallback.
+  /** q42's fingerprint: documents → (doc_id, simhash BIGINT, 32 bits
+    * used) from the zero-shuffle scalar kernel.
     */
   private def simhashed(s: SparkSession, d: String): DataFrame =
-    if (native(s)) {
-      Tables.spread(Tables(s, d, "documents"))
-        .select(col("doc_id"), call_function("graft_simhash", col("text")).as("simhash"))
-    } else {
-      val tok = Tables.spread(Tables(s, d, "documents"))
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val tc = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("cnt"))
-      val th = tc.withColumn("h", hash32(col("w")))
-      val bits = th
-        .select(col("doc_id"), col("h"), col("cnt"),
-          explode(sequence(lit(0), lit(31))).as("j"))
-        .groupBy(col("doc_id"), col("j"))
-        .agg(sum(when(expr("(shiftright(h, j) & 1) = 1"), col("cnt"))
-          .otherwise(-col("cnt"))).as("sm"))
-      bits.groupBy(col("doc_id"))
-        .agg(sum(when(col("sm") > 0, expr("shiftleft(CAST(1 AS BIGINT), j)"))
-          .otherwise(lit(0L))).as("simhash"))
-    }
+    Tables.spread(Tables(s, d, "documents"))
+      .select(col("doc_id"), call_function("graft_simhash", col("text")).as("simhash"))
 
   /** DuckDB mirror of [[simhashed]], ending in relation `sh2(doc_id, simhash)`. */
   private val simhashCte =
@@ -262,7 +225,7 @@ object Dedup {
       headline = false),
 
     // ---- Q40: MinHash + LSH near-dup. Signatures are computed per-doc
-    //      in one pass (native kernel / HOF fallback — no 32× row
+    //      in one pass (native kernel — no 32× row
     //      blow-up); candidates come from per-bucket pair generation
     //      after one (band, signature) shuffle, then exact-Jaccard
     //      verification, join-free. Band buckets are size-capped
@@ -298,9 +261,8 @@ object Dedup {
     "q45_simhash_hamming" -> Q(
       (s, d) => {
         val groups = textGroups(s, d)
-        val sigs = if (native(s))
-          groups.select(col("doc_id"), call_function("graft_simhash", col("text")).as("simhash"))
-        else simhashed(s, d).join(groups.select(col("doc_id")), "doc_id")
+        val sigs = groups.select(col("doc_id"),
+          call_function("graft_simhash", col("text")).as("simhash"))
         // Shuffle-byte narrowing (guide §2.3, round-19 verdict item 6's
         // q45 target): the (band INT, bbits BIGINT) pair fuses into ONE
         // 18-bit INT key (band << 14 | bbits — injective, so the bucket
@@ -332,11 +294,11 @@ object Dedup {
           explode(array(keyExprs: _*)).as("bkey"))
         val repPairs = observeCap(bands
           .groupBy(col("bkey"))
-          .agg(collectCapped(s, struct(col("doc_id"), col("simhash")), witness(BucketCap))
+          .agg(collectCapped(struct(col("doc_id"), col("simhash")), witness(BucketCap))
             .as("ids")),
           "hamming_bucket_caps", "ids", BucketCap)
           .filter(size(col("ids")) > 1)
-          .select(explode(sortedPairs(s, col("ids"))).as("p"))
+          .select(explode(sortedPairs(col("ids"))).as("p"))
           .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
             // the INT→BIGINT promotion inside bit_count SIGN-EXTENDS,
             // so an xor with bit 31 set (sign bits differ) would count
@@ -479,10 +441,10 @@ object Dedup {
       // production artifact); probe = gating one incoming batch against it
       probe = Some((s, d) => {
         val docs = Tables.spread(Tables(s, d, "documents"))
-        val idx = bandIndex(s, docs.filter(col("doc_id") % 10 < 8), BucketCap)
+        val idx = bandIndex(docs.filter(col("doc_id") % 10 < 8), BucketCap)
           .persistTracked
         idx.count()
-        () => fuzzyProbe(s, docs.filter(col("doc_id") % 10 >= 8), idx)
+        () => fuzzyProbe(docs.filter(col("doc_id") % 10 >= 8), idx)
       })),
 
     // ---- Q41 variant: embedding-cosine near-dup pairs, LSH-bucketed —
@@ -557,18 +519,18 @@ object Dedup {
     //      Σ bucket² bounded by BucketCap.
     "q235_minhash_accuracy" -> Q(
       (s, d) => {
-        val docs = shingledReps(s, textGroups(s, d))
-        val sig = withSig(s, docs)
+        val docs = shingledReps(textGroups(s, d))
+        val sig = withSig(docs)
         val bands = sig
           .select(col("doc_id"), array_distinct(col("hs")).as("hs"),
             col("sig"), posexplode(array(bandSigCols: _*)).as(Seq("band", "bsig")))
         bands
           .groupBy(col("band"), col("bsig"))
-          .agg(collectCapped(s, struct(col("doc_id"), col("hs"), col("sig")),
+          .agg(collectCapped(struct(col("doc_id"), col("hs"), col("sig")),
             witness(BucketCap)).as("ids"))
           .withColumn("ids", slice(col("ids"), 1, BucketCap))
           .filter(size(col("ids")) > 1)
-          .select(explode(sortedPairs(s, col("ids"))).as("p"))
+          .select(explode(sortedPairs(col("ids"))).as("p"))
           .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
             expr("size(filter(zip_with(p.a.sig, p.b.sig, (x, y) -> x = y), v -> v))")
               .cast("long").as("e32"),
@@ -708,29 +670,18 @@ object Dedup {
     * size-capped at `cap` (the [[BucketCap]] guard — now guarding
     * near-identical-but-distinct mega-buckets; exact duplicates never
     * reach the buckets). Signatures are computed per-rep in one pass
-    * (native kernel / HOF fallback); candidates come from per-bucket
+    * (native kernel); candidates come from per-bucket
     * pair generation after one (band, signature) shuffle; Jaccard
     * verification is join-free (8-byte-hashed shingle sets ride the
     * band shuffle — never the strings) and runs BEFORE the pair-dedup
     * shuffle so no payload rides it.
     */
-  /** (doc_id, sh) → + `sig`: the 32-permutation MinHash signature — one
-    * native kernel pass when registered, else the 32-aggregate HOF fold
-    * (same result by construction). Shared by [[minhashPairs]] and
+  /** (doc_id, hs) → + `sig`: the 32-permutation MinHash signature in
+    * one native kernel pass. Shared by [[minhashPairs]] and
     * [[fuzzyIncremental]].
     */
-  private def withSig(s: SparkSession, docs: DataFrame): DataFrame =
-    if (native(s))
-      docs.withColumn("sig", call_function("graft_minhash_h60", col("hs")))
-    else {
-      // hashModP(shingle) ≡ hash60(shingle) % P, and `hs` carries the
-      // hash60s — the fold is unchanged, its input just arrives hashed
-      val hv = docs.withColumn("hv", transform(col("hs"), x => x % lit(P)))
-      hv.withColumn("sig", array(seeds.map { case (a, b) =>
-        aggregate(col("hv"), lit(P),
-          (acc, h) => least(acc, (lit(a) * h + lit(b)) % lit(P)))
-      }: _*)).drop("hv")
-    }
+  private def withSig(docs: DataFrame): DataFrame =
+    docs.withColumn("sig", call_function("graft_minhash_h60", col("hs")))
 
   /** One string band key per LSH band from a `sig` column. */
   private def bandSigCols: Seq[Column] = (0 until NumBands).map { k =>
@@ -741,8 +692,8 @@ object Dedup {
   def minhashPairs(s: SparkSession, d: String, cap: Int,
                    observeCaps: Boolean = true): DataFrame = {
     val groups = textGroups(s, d)
-    val docs = shingledReps(s, groups)
-    val sig = withSig(s, docs)
+    val docs = shingledReps(groups)
+    val sig = withSig(docs)
     val bandCols = bandSigCols
     // Carry the shingle set through the band shuffle (≈NumBands× the
     // doc payload) so candidate verification needs NO join back to
@@ -759,12 +710,12 @@ object Dedup {
         posexplode(array(bandCols: _*)).as(Seq("band", "bsig")))
     val buckets = bands
       .groupBy(col("band"), col("bsig"))
-      .agg(collectCapped(s, struct(col("doc_id"), col("hs")), witness(cap)).as("ids"))
+      .agg(collectCapped(struct(col("doc_id"), col("hs")), witness(cap)).as("ids"))
     val repPairs = (if (observeCaps)
         observeCap(buckets, "minhash_bucket_caps", "ids", cap)
       else buckets.withColumn("ids", slice(col("ids"), 1, cap)))
       .filter(size(col("ids")) > 1)
-      .select(explode(sortedPairs(s, col("ids"))).as("p"))
+      .select(explode(sortedPairs(col("ids"))).as("p"))
       // Verify BEFORE the pair-dedup shuffle: jaccard is computed
       // map-side per band occurrence (recomputed ≤ NumBands times for a
       // pair matching several bands — pure CPU), so the dedup groupBy
@@ -857,24 +808,20 @@ object Dedup {
     * (doc_id, hs: hashed shingle set, band, bsig). Shingle-less docs
     * (<3 tokens) carry no row — they can never verify at jaccard ≥ 0.7.
     */
-  def docBands(s: SparkSession, docs: DataFrame): DataFrame = {
-    val hs = if (native(s)) call_function("graft_shingles3_h60", col("text"))
-             else transform(shingles3(col("text")), x => hash60(x))
-    val base = docs.select(col("doc_id"), hs.as("hs")).filter(size(col("hs")) > 0)
-    withSig(s, base)
+  def docBands(docs: DataFrame): DataFrame =
+    withSig(shingledReps(docs))
       .select(col("doc_id"), array_distinct(col("hs")).as("hs"),
         posexplode(array(bandSigCols: _*)).as(Seq("band", "bsig")))
-  }
 
   /** Corpus (doc_id, text) → the reusable dedup-gate index artifact:
     * (band, bsig) → first-`cap`-by-id member list carrying hashed
     * shingle sets. In production this is computed once, stored bucketed
     * by (band, bsig), and probed by every incoming batch.
     */
-  def bandIndex(s: SparkSession, corpus: DataFrame, cap: Int): DataFrame =
-    observeCap(docBands(s, corpus)
+  def bandIndex(corpus: DataFrame, cap: Int): DataFrame =
+    observeCap(docBands(corpus)
       .groupBy(col("band"), col("bsig"))
-      .agg(collectCapped(s, struct(col("doc_id"), col("hs")), witness(cap))
+      .agg(collectCapped(struct(col("doc_id"), col("hs")), witness(cap))
         .as("members")),
       "fuzzy_index_caps", "members", cap)
 
@@ -885,8 +832,8 @@ object Dedup {
     * is stream-static, and the per-doc aggregate groups by doc — see
     * [[graft.streaming.StatefulOps.fuzzyGate]].
     */
-  def fuzzyProbe(s: SparkSession, incoming: DataFrame, idx: DataFrame): DataFrame = {
-    val pairs = docBands(s, incoming)
+  def fuzzyProbe(incoming: DataFrame, idx: DataFrame): DataFrame = {
+    val pairs = docBands(incoming)
       .join(idx, Seq("band", "bsig"))
       .select(col("doc_id").as("in_id"), col("hs").as("ihs"),
         explode(col("members")).as("m"))
@@ -906,8 +853,8 @@ object Dedup {
 
   def fuzzyIncremental(s: SparkSession, d: String, cap: Int): DataFrame = {
     val docs = Tables.spread(Tables(s, d, "documents"))
-    fuzzyProbe(s, docs.filter(col("doc_id") % 10 >= 8),
-      bandIndex(s, docs.filter(col("doc_id") % 10 < 8), cap))
+    fuzzyProbe(docs.filter(col("doc_id") % 10 >= 8),
+      bandIndex(docs.filter(col("doc_id") % 10 < 8), cap))
   }
 
   /** The DuckDB mirror of [[fuzzyIncremental]] — same signatures and
@@ -996,20 +943,20 @@ object Dedup {
     val sig = e.crossJoin(broadcast(planes))
       .select(col("vec_id"), col("v"),
         expr(s"CAST((p_id - $EmbPlaneBase) DIV $EmbBandBits AS INT)").as("band"),
-        (when(VectorFns.dot(s, col("v"), col("pv")) > 0, lit(1L)).otherwise(lit(0L)) *
+        (when(VectorFns.dot(col("v"), col("pv")) > 0, lit(1L)).otherwise(lit(0L)) *
           expr(s"shiftleft(CAST(1 AS BIGINT), CAST((p_id - $EmbPlaneBase) % $EmbBandBits AS INT))"))
           .as("term"))
       .groupBy(col("vec_id"), col("band"))
       .agg(sum(col("term")).as("bsig"), first(col("v")).as("v"))
     val repPairs = observeCap(sig.groupBy(col("band"), col("bsig"))
-      .agg(collectCapped(s, struct(col("vec_id"), col("v")), witness(cap)).as("ids")),
+      .agg(collectCapped(struct(col("vec_id"), col("v")), witness(cap)).as("ids")),
       "embed_bucket_caps", "ids", cap)
       .filter(size(col("ids")) > 1)
-      .select(explode(sortedPairs(s, col("ids"))).as("p"))
+      .select(explode(sortedPairs(col("ids"))).as("p"))
       // verify map-side per band occurrence (q41's payload-free-dedup
       // shape): the pair-dedup shuffle carries (ids, cos), not vectors
       .select(col("p.a.vec_id").as("doc_a"), col("p.b.vec_id").as("doc_b"),
-        VectorFns.cosine(s, col("p.a.v"), col("p.b.v")).as("cos"))
+        VectorFns.cosine(col("p.a.v"), col("p.b.v")).as("cos"))
       .filter(col("cos") >= 0.45)
       // a pair can collide in several bands — keep it once
       .groupBy(col("doc_a"), col("doc_b"))
@@ -1123,7 +1070,7 @@ object Dedup {
   private def shinglePairCore(s: SparkSession, d: String, dfCap: Int,
                               minJac: Option[Double] = None): (DataFrame, DataFrame) = {
     val groups = textGroups(s, d)
-    val docs = shingledReps(s, groups)
+    val docs = shingledReps(groups)
     // `hs` arrives pre-hashed (one slot per distinct shingle STRING),
     // so size(hs) is the exact denominator and the posting explode
     // emits bare longs — no string stream, no second hash pass
@@ -1135,10 +1082,10 @@ object Dedup {
     // buffer for a stopword-run shingle stays O(dfCap), not O(df).
     val witnessCap = if (dfCap == Int.MaxValue) dfCap else dfCap + 1
     val pairs = observeCap(e.groupBy(col("s"))
-      .agg(collectCapped(s, struct(col("doc_id"), col("n")), witnessCap).as("ids")),
+      .agg(collectCapped(struct(col("doc_id"), col("n")), witnessCap).as("ids")),
       "ngram_df_caps", "ids", dfCap, truncate = false)
       .filter(size(col("ids")) > 1 && size(col("ids")) <= dfCap)
-      .select(explode(sortedPairs(s, col("ids"))).as("p"))
+      .select(explode(sortedPairs(col("ids"))).as("p"))
     val feasible = minJac match {
       case Some(tau) =>
         // min ≥ τ/(1+τ)·(na+nb) ⟺ (1+τ)·min ≥ τ·(na+nb). For the

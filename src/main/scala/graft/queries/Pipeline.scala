@@ -93,7 +93,7 @@ object Pipeline {
   def decontaminate(docs: DataFrame, isBench: Column,
                     idCap: Long = ContamBroadcastCap): DataFrame = {
     def sh(df: DataFrame) = df.select(col("doc_id"),
-      explode(distinctShingles(docs.sparkSession, col("text"), DecontamGram)).as("s"))
+      explode(distinctShingles(col("text"), DecontamGram)).as("s"))
     val benchSh = sh(docs.filter(isBench)).select(col("s")).distinct()
     val contaminated = sh(docs.filter(!isBench))
       .join(broadcast(benchSh), Seq("s"), "left_semi")
@@ -133,23 +133,18 @@ object Pipeline {
     * re-embedded as a literal — the q51 collect-and-rebuild index-
     * artifact shape, and what `might_contain` requires (its filter
     * argument must be a constant or scalar subquery, never a join
-    * column). One row crosses the driver, not the shingle set.
-    *
-    * Fallback without the extension functions: the prune disappears and
-    * the exact join sees all shingles — same result, q95's cost.
+    * column). One row crosses the driver, not the shingle set. An empty
+    * bench set builds no filter, so the exact join sees all shingles.
     */
   def decontaminateBloom(docs: DataFrame, isBench: Column): DataFrame = {
-    val session = docs.sparkSession
     def sh(df: DataFrame) = df.select(col("doc_id"),
-      explode(distinctShingles(session, col("text"), DecontamGram)).as("s"))
+      explode(distinctShingles(col("text"), DecontamGram)).as("s"))
     val benchSh = sh(docs.filter(isBench)).select(col("s")).distinct()
     val trainSh = sh(docs.filter(!isBench))
     val bloom: Option[Array[Byte]] =
-      if (session.catalog.functionExists("graft_bloom_contains"))
-        Option(benchSh.agg(call_function("graft_bloom_agg",
-            xxhash64(col("s")), lit(BloomItems), lit(BloomBits)).as("bf"))
-          .head().getAs[Array[Byte]]("bf")) // null on an empty bench set
-      else None
+      Option(benchSh.agg(call_function("graft_bloom_agg",
+          xxhash64(col("s")), lit(BloomItems), lit(BloomBits)).as("bf"))
+        .head().getAs[Array[Byte]]("bf")) // null on an empty bench set
     val candidates = bloom match {
       case Some(bf) =>
         trainSh.filter(call_function("graft_bloom_contains",
@@ -174,35 +169,25 @@ object Pipeline {
   val MaxDupBigram = 0.1
   val MinDocTokens = 20
 
-  /** Word k-shingles of `t` as an array column (empty when the doc is
-    * shorter than k — explode() then contributes no rows, which is the
-    * correct "cannot be contaminated / not measurable" semantics).
-    */
-  private def shingles(t: Column, k: Int): Column =
-    when(size(t) >= k,
-      transform(sequence(lit(1), size(t) - (k - 1)),
-        i => concat_ws(" ", slice(t, i, lit(k)))))
-      .otherwise(typedLit(Seq.empty[String]))
-
   /** q113's gate kernel as ONE reusable stateless projection: the
     * q60-language, q61-quality, and q96-repetition predicates (the q90
     * rules verbatim) as a struct Column — shared by the batch funnel and
     * the windowed streaming intake monitor
-    * ([[graft.streaming.StatefulOps.funnelMonitor]]). Pure per-row HOF
+    * ([[graft.streaming.StatefulOps.funnelMonitor]]). Pure per-row
     * arithmetic — streams verbatim.
     */
-  def gateFlags(s: SparkSession, text: Column): Column = {
+  def gateFlags(text: Column): Column = {
     val t = split(text, " ")
     val n = size(t)
-    val nStop = TextAnalysis.markerCount(s, t, TextAnalysis.StopWords)
+    val nStop = TextAnalysis.markerCount(t, TextAnalysis.StopWords)
     // predicted-English ⟺ the en marker count >= every other language's
     // (the argmax chain's first branch) — ONE copy of the rule
-    val gLang = TextAnalysis.predictedLang(s, t) === "en"
+    val gLang = TextAnalysis.predictedLang(t) === "en"
     val gQ = least(lit(1.0), n / lit(100.0)) *
       (lit(1.0) - nStop.cast("double") / n) >= MinQuality
-    // repetition gate through the one-pass kernel (HOF fallback inside
-    // repetitionProfile is bit-identical) — the same fields q96 reports
-    val rep = repetitionProfile(s, text)
+    // repetition gate through the one-pass kernel — the same fields q96
+    // reports
+    val rep = repetitionProfile(text)
     val gRep = rep.getField("uniq_frac") >= MinUniqRatio &&
       rep.getField("dup2_frac") <= MaxDupBigram &&
       rep.getField("n_tok") >= MinDocTokens
@@ -210,77 +195,45 @@ object Pipeline {
   }
 
   /** q96's repetition profile — struct(n_tok, uniq_frac, dup2_frac,
-    * dup3_frac) — through the codegen'd one-pass kernel when registered
-    * (three interpreted `array_distinct ∘ transform(sequence…)` shingle
-    * chains per row otherwise), with the HOF's null-text semantics
-    * mirrored exactly: `when(size(t) >= k, …).otherwise([])` turns a
-    * NULL token array into an EMPTY shingle array, so the dup fractions
-    * are 0.0 on NULL text while n_tok/uniq_frac stay NULL — hence the
-    * coalesce on the dup fields only. Parity (fixture docs + spacing
-    * edges + NULL) is pinned in TextKernelSpec.
+    * dup3_frac) — through the codegen'd one-pass kernel, with the
+    * interpreted shingle-chain form's null-text semantics mirrored
+    * exactly: that form turns a NULL token array into an EMPTY shingle
+    * array, so the dup fractions are 0.0 on NULL text while
+    * n_tok/uniq_frac stay NULL — hence the coalesce on the dup fields
+    * only. Parity (fixture docs + spacing edges + NULL) is pinned in
+    * TextKernelSpec.
     */
-  def repetitionProfile(s: SparkSession, text: Column): Column =
-    if (s.catalog.functionExists("graft_repetition")) {
-      val c = call_function("graft_repetition", text)
-      struct(
-        c.getField("n_tok").as("n_tok"),
-        c.getField("uniq_frac").as("uniq_frac"),
-        coalesce(c.getField("dup2_frac"), lit(0.0)).as("dup2_frac"),
-        coalesce(c.getField("dup3_frac"), lit(0.0)).as("dup3_frac"))
-    } else repetitionProfileHof(text)
-
-  /** The interpreted-HOF formulation of [[repetitionProfile]] — the
-    * extension-less fallback and the parity witness the kernel is
-    * pinned against.
-    */
-  private[graft] def repetitionProfileHof(text: Column): Column = {
-    val t = split(text, " ")
-    val n = size(t)
-    def dupFrac(k: Int): Column = {
-      val g = shingles(t, k)
-      when(size(g) > 0,
-        lit(1.0) - size(array_distinct(g)).cast("double") / size(g).cast("double"))
-        .otherwise(lit(0.0))
-    }
-    struct(n.as("n_tok"),
-      (size(array_distinct(t)).cast("double") / n.cast("double")).as("uniq_frac"),
-      dupFrac(2).as("dup2_frac"), dupFrac(3).as("dup3_frac"))
+  def repetitionProfile(text: Column): Column = {
+    val c = call_function("graft_repetition", text)
+    struct(
+      c.getField("n_tok").as("n_tok"),
+      c.getField("uniq_frac").as("uniq_frac"),
+      coalesce(c.getField("dup2_frac"), lit(0.0)).as("dup2_frac"),
+      coalesce(c.getField("dup3_frac"), lit(0.0)).as("dup3_frac"))
   }
 
   /** DISTINCT word k-shingles of `text`: the native graft_shingles
-    * kernel when registered (straight-line Java — shingle construction
-    * is the dominant scan cost of the overlap/decontamination family),
-    * else array_distinct over the HOF form (bit-identical, parity spec
-    * in TextKernelSpec). Only used where per-doc distinctness is
+    * kernel (straight-line Java — shingle construction is the dominant
+    * scan cost of the overlap/decontamination family; parity spec in
+    * TextKernelSpec). Only used where per-doc distinctness is
     * semantics-free — every consumer is set-shaped (DISTINCT, semi-join
-    * probe, collect_set). q96's duplicate-counting fractions keep the
-    * raw HOF form.
+    * probe, collect_set).
     */
-  private def distinctShingles(s: SparkSession, text: Column, k: Int): Column =
-    if (s.catalog.functionExists("graft_shingles"))
-      call_function("graft_shingles", text, lit(k))
-    // when() without otherwise → NULL on NULL text, matching the
-    // null-intolerant native expression (a bare array_distinct chain
-    // would yield [] instead — a branch divergence the null-safe parity
-    // spec pins)
-    else when(text.isNotNull, array_distinct(shingles(split(text, " "), k)))
+  private def distinctShingles(text: Column, k: Int): Column =
+    call_function("graft_shingles", text, lit(k))
 
   /** [[distinctShingles]] hashed to 60-bit md5 prefixes — the q110
     * index key (8-byte shuffle keys instead of k-word strings; the
     * q41/q43 shuffle-key design). Dedup is on the STRING; the consumer
     * oracle hashes identically, so parity is unconditional.
     */
-  private def distinctShinglesH60(s: SparkSession, text: Column, k: Int): Column =
-    if (s.catalog.functionExists("graft_shingles_h60"))
-      call_function("graft_shingles_h60", text, lit(k))
-    else when(text.isNotNull, transform(
-      array_distinct(shingles(split(text, " "), k)),
-      x => graft.functions.ParityFns.hash60(x)))
+  private def distinctShinglesH60(text: Column, k: Int): Column =
+    call_function("graft_shingles_h60", text, lit(k))
 
   /** q123's window derivation, shared with the span index + streaming
     * gate: the (doc_id, h) winnowing-anchored SpanTokens-token window
     * hashes of a (doc_id, text, …) frame. Anchor selection and window
-    * hashing are per-row scan-stage HOFs — no shuffle here; consumers
+    * hashing are one per-row scan-stage kernel — no shuffle here; consumers
     * decide the partitioning. Content-defined anchoring (see
     * SpanAnchorMod) is the property the whole family rests on: two
     * copies of a run pick identical interior anchors at any offset.
@@ -295,30 +248,13 @@ object Pipeline {
     * consumers pay nothing for the shared derivation.
     */
   def spanWindowsPos(docs: DataFrame): DataFrame =
-    if (docs.sparkSession.catalog.functionExists("graft_span_windows"))
-      // fused kernel: anchor selection + window hashing in one codegen'd
-      // pass (short docs yield the empty array — exactly the rows the
-      // HOF path's n >= SpanTokens filter dropped)
-      docs.select(col("doc_id"),
-          explode(call_function("graft_span_windows", col("text"),
-            lit(SpanTokens), lit(SpanAnchorMod))).as("p"))
-        .select(col("doc_id"), col("p").getField("i").as("i"),
-          col("p").getField("h").as("h"))
-    else {
-      val toks = split(col("text"), " ")
-      def anchorHash(c: Column) =
-        conv(substring(md5(c), 1, 4), 16, 10).cast("long")
-      val anchors = filter(
-        sequence(lit(0), col("n") - SpanTokens),
-        i => anchorHash(element_at(col("toks"), i + 1)) % SpanAnchorMod === 0)
-      docs.select(col("doc_id"), toks.as("toks"), size(toks).as("n"))
-        .filter(col("n") >= SpanTokens)
-        .select(col("doc_id"), col("toks"), explode(anchors).as("i"))
-        .select(col("doc_id"), col("i"),
-          conv(substring(md5(array_join(
-            slice(col("toks"), col("i") + 1, lit(SpanTokens)), " ")), 1, 15), 16, 10)
-            .cast("long").as("h"))
-    }
+    // fused kernel: anchor selection + window hashing in one codegen'd
+    // pass (short docs yield the empty array, so they emit no rows)
+    docs.select(col("doc_id"),
+        explode(call_function("graft_span_windows", col("text"),
+          lit(SpanTokens), lit(SpanAnchorMod))).as("p"))
+      .select(col("doc_id"), col("p").getField("i").as("i"),
+        col("p").getField("h").as("h"))
 
   /** The static span-index artifact: the corpus's DISTINCT window
     * hashes — 8 bytes per ~SpanAnchorMod corpus tokens, the precomputed
@@ -462,27 +398,19 @@ object Pipeline {
     //      map-side BEFORE the per-stratum shuffle — the old ranking
     //      window shuffled the WHOLE corpus into per-stratum sorts (the
     //      difference at 100 TB between moving N×#strata rows and
-    //      moving everything). Window fallback is result-identical.
+    //      moving everything).
     "q92_stratified_sample" -> Q(
       (s, d) => {
         val h = expr(
           "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)")
         val docs = Tables.spread(Tables(s, d, "documents"))
           .select(col("doc_id"), col("lang"), h.as("h"))
-        if (s.catalog.functionExists("graft_topk"))
-          docs.groupBy(col("lang"))
-            .agg(call_function("graft_topk", (-col("h")).cast("double"),
-              col("doc_id"), lit(SamplePerStratum)).as("top"))
-            .select(col("lang"), posexplode(col("top")).as(Seq("pos", "t")))
-            .select(col("t.id").as("doc_id"), col("lang"),
-              (col("pos") + 1).cast("int").as("rn"))
-        else {
-          val w = Window.partitionBy(col("lang"))
-            .orderBy(col("h").asc, col("doc_id").asc)
-          docs.withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= SamplePerStratum)
-            .select(col("doc_id"), col("lang"), col("rn").cast("int").as("rn"))
-        }
+        docs.groupBy(col("lang"))
+          .agg(call_function("graft_topk", (-col("h")).cast("double"),
+            col("doc_id"), lit(SamplePerStratum)).as("top"))
+          .select(col("lang"), posexplode(col("top")).as(Seq("pos", "t")))
+          .select(col("t.id").as("doc_id"), col("lang"),
+            (col("pos") + 1).cast("int").as("rn"))
       },
       Some(s"""SELECT doc_id, lang, CAST(rn AS INT) AS rn FROM (
               |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
@@ -752,16 +680,15 @@ object Pipeline {
 
     // ---- within-document repetition quality (the Gopher-rule family):
     //      unique-token ratio and duplicated-bigram/trigram fractions,
-    //      plus the keep verdict. Pure per-row HOF arithmetic — no
+    //      plus the keep verdict. Pure per-row kernel arithmetic — no
     //      shuffle, evaluates in the scan stage at any corpus size. The
     //      ratios stay raw IEEE doubles (identical expression trees on
     //      both engines) — rounding per-row would re-introduce the
     //      HALF_UP divergence the verify notes warn about.
     "q96_repetition_quality" -> Q(
       (s, d) => {
-        // one codegen'd O(n) kernel pass per row (HOF fallback inside
-        // repetitionProfile is bit-identical — TextKernelSpec parity)
-        val c = repetitionProfile(s, col("text"))
+        // one codegen'd O(n) kernel pass per row (TextKernelSpec parity)
+        val c = repetitionProfile(col("text"))
         val n = c.getField("n_tok")
         val uniq = c.getField("uniq_frac")
         val dup2 = c.getField("dup2_frac")
@@ -1099,7 +1026,7 @@ object Pipeline {
         // distinctShinglesH60) so the hash match is unconditional
         val sh = Tables.spread(Tables(s, d, "documents"))
           .select(col("source"),
-            explode(distinctShinglesH60(s, col("text"), OverlapGram)).as("sh"))
+            explode(distinctShinglesH60(col("text"), OverlapGram)).as("sh"))
         // ONE heavy pass: per-shingle source sets. collect_set dedups
         // map-side, so no separate distinct shuffle precedes it (probe:
         // the extra exchange cost ~40% on the all-shared corpus). The
@@ -1164,7 +1091,7 @@ object Pipeline {
     //      construction; retention = distinct survivors / intake.
     "q113_gate_funnel" -> Q(
       (s, d) => {
-        val g = gateFlags(s, col("text"))
+        val g = gateFlags(col("text"))
         val gLang = g.getField("g_lang")
         val gQ = g.getField("g_q")
         val all = gLang && gQ && g.getField("g_rep")
@@ -1274,7 +1201,7 @@ object Pipeline {
       (s, d) => {
         val sh = Tables.spread(Tables(s, d, "documents"))
           .select(col("doc_id"),
-            explode(distinctShingles(s, col("text"), DecontamGram)).as("sh"))
+            explode(distinctShingles(col("text"), DecontamGram)).as("sh"))
         val bench = sh.filter(col("doc_id") % 97 === 0)
           .select(col("doc_id").as("bench_id"), col("sh"))
         val train = sh.filter(col("doc_id") % 97 =!= 0)
@@ -1314,9 +1241,8 @@ object Pipeline {
         val toks = split(col("text"), " ")
         val nTok = size(toks)
         // stopword count through the codegen'd bounded-vocab kernel
-        // (markerCount: vals = 1, dflt = 0 counts occurrences exactly
-        // like the interpreted filter/OR-chain it falls back to)
-        val nStop = TextAnalysis.markerCount(s, toks, Seq("the", "a"))
+        // (markerCount: vals = 1, dflt = 0 counts occurrences exactly)
+        val nStop = TextAnalysis.markerCount(toks, Seq("the", "a"))
         val quality = least(lit(1.0), nTok / lit(100.0)) *
           (lit(1.0) - nStop.cast("double") / nTok)
         // doc-grain (id, source, n_tok, bucket) projection persists
@@ -1450,7 +1376,7 @@ object Pipeline {
     //      offset, so detection is alignment-invariant — the property a
     //      fixed stride lacks (the spec plants copies at offsets that
     //      differ mod the stride to prove it). 100 TB shape: anchor
-    //      selection and window hashing are per-row scan-stage HOFs;
+    //      selection and window hashing are one per-row scan kernel;
     //      only (h, doc_id) 16-byte rows reach the ONE span shuffle,
     //      expected tokens/SpanAnchorMod windows per doc — an 8th of a
     //      suffix-scan's row count. The h-grain occurrence count is a
@@ -2304,13 +2230,11 @@ object Pipeline {
     * serving path: least(1, n_tok/100) · (1 − stopword_ratio) — raw
     * IEEE ops only, bit-identical across engines.
     */
-  private[graft] def docQuality(s: SparkSession, textCol: Column): Column = {
+  private[graft] def docQuality(textCol: Column): Column = {
     val toks = split(textCol, " ")
     val nTok = size(toks)
-    // stopword count through the codegen'd bounded-vocab kernel when
-    // registered (markerCount carries the bit-identical filter/OR-chain
-    // fallback for extension-less sessions)
-    val nStop = TextAnalysis.markerCount(s, toks, Seq("the", "a"))
+    // stopword count through the codegen'd bounded-vocab kernel
+    val nStop = TextAnalysis.markerCount(toks, Seq("the", "a"))
     least(lit(1.0), nTok / lit(100.0)) *
       (lit(1.0) - nStop.cast("double") / nTok)
   }
@@ -2318,8 +2242,8 @@ object Pipeline {
   /** [[docQuality]] at the 2⁻²⁰ fixed-point grain the budget-gate
     * artifact is expressed in.
     */
-  private[graft] def qualityFp(s: SparkSession, textCol: Column): Column =
-    floor(docQuality(s, textCol) *
+  private[graft] def qualityFp(textCol: Column): Column =
+    floor(docQuality(textCol) *
       lit(graft.queries.Similarity.FixedPointScale.toDouble)).cast("long")
 
   /** q248's doc-grain selection frame WITH the fixed-point quality
@@ -2340,7 +2264,7 @@ object Pipeline {
     */
   private[graft] def q248Tagged(s: org.apache.spark.sql.SparkSession,
                                 d: String): DataFrame = {
-    val quality = docQuality(s, col("text"))
+    val quality = docQuality(col("text"))
     // doc-grain projection persists ONCE: the budget aggregate, the
     // histogram, the doc-grain tag join — and budgetFit — all read it
     val docs = Tables.spread(Tables(s, d, "documents"))
@@ -2437,7 +2361,7 @@ object Pipeline {
     */
   def budgetProbe(batch: DataFrame, cutoffs: Map[String, Long]): DataFrame =
     batch
-      .withColumn("q_fp", qualityFp(batch.sparkSession, col("text")))
+      .withColumn("q_fp", qualityFp(col("text")))
       .withColumn("cut", element_at(typedLit(cutoffs), col("source")))
       .withColumn("keep", coalesce(col("q_fp") >= col("cut"), lit(false)))
       .drop("cut")
@@ -2465,24 +2389,16 @@ object Pipeline {
       .collect().map(_.getLong(0)).toSeq
 
   /** The SERVING half: scrub every line whose hash60 is in the fitted
-    * boilerplate set — one stateless per-row HOF projection (filter
+    * boilerplate set — one stateless per-row projection (filter
     * preserves original line order), zero shuffles at any corpus size.
     * `boiler` is bounded by [[boilerplateFit]]'s maxLines, so the
     * array literal broadcasts with the plan; the per-line probe is a
-    * linear array_contains — fine at serving line counts; switch the
-    * artifact to a sorted array + binary search expression if a corpus
-    * ever fits 100k+ distinct boilerplate lines.
+    * binary search over the sorted literal.
     */
   def scrubLines(df: DataFrame, textCol: String, boiler: Seq[Long]): DataFrame = {
-    // SORTED literal: the native probe is a binary search; the HOF
-    // fallback (no extensions registered) is the linear array_contains
     val bl = typedLit(boiler.sorted.toArray)
-    val native = df.sparkSession.catalog.functionExists("graft_sorted_contains")
-    def hit(x: Column): Column = {
-      val h = graft.functions.ParityFns.hash60(lower(trim(x)))
-      if (native) call_function("graft_sorted_contains", bl, h)
-      else array_contains(bl, h)
-    }
+    def hit(x: Column): Column = call_function("graft_sorted_contains", bl,
+      graft.functions.ParityFns.hash60(lower(trim(x))))
     val sents = split(col(textCol), "\\. ")
     val kept = filter(sents, x => !hit(x))
     df.withColumn("clean_text", array_join(kept, ". "))
@@ -2540,10 +2456,10 @@ object Pipeline {
                               d: String): DataFrame = {
     val toks = split(col("text"), " ")
     val nTok = size(toks)
-    val nStop = TextAnalysis.markerCount(s, toks, TextAnalysis.StopWords)
+    val nStop = TextAnalysis.markerCount(toks, TextAnalysis.StopWords)
     val stopRatio = nStop.cast("double") / nTok
     val quality = least(lit(1.0), nTok / lit(100.0)) * (lit(1.0) - stopRatio)
-    val isEnglish = TextAnalysis.predictedLang(s, toks) === "en"
+    val isEnglish = TextAnalysis.predictedLang(toks) === "en"
     Tables.spread(Tables(s, d, "documents"))
       .withColumn("quality", quality)
       .filter(isEnglish && col("quality") >= MinQuality)

@@ -4,7 +4,6 @@ import graft.Caches.TrackedPersist
 import graft.Tables
 import graft.functions.VectorFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
@@ -69,24 +68,6 @@ object Similarity {
     */
   val KMeansIters = 2
   val FixedPointScale = 1048576L
-
-  /** Interpreted-HOF reference formulations of the SRP signature and
-    * signature Hamming distance — the bit-identical fallbacks for the
-    * graft_srpsig / graft_hamming kernels, and the cross-check surface
-    * AnnRecallSpec compares the native path against. Only the mixer in
-    * [[planeSql]] and the sequential left-fold order matter for parity.
-    */
-  def srpSigHof(v: String): Column = expr(
-    s"""transform(sequence(0, ${SigBits - 1}), p ->
-       |  CASE WHEN aggregate(
-       |    transform(sequence(0, size($v) - 1), i -> element_at($v, i + 1) *
-       |      ${planeSql(s"p * size($v) + i")}),
-       |    CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) > 0
-       |  THEN 1 ELSE 0 END)""".stripMargin)
-
-  def hammingHof(a: String, b: String): Column = expr(
-    s"""aggregate(zip_with($a, $b,
-       |  (x, y) -> CASE WHEN x = y THEN 0 ELSE 1 END), 0, (acc, z) -> acc + z)""".stripMargin)
 
   /** The DuckDB mirror of one Lloyd round, chained KMeansIters times:
     * a_k = assignment to c_{k-1}'s nearest centroid, m_k = fixed-point
@@ -155,7 +136,7 @@ object Similarity {
     * correlated, and measured recall collapses to 0.12 (vs 0.96 here and
     * for Gaussian planes).
     */
-  private def planeSql(n: String): String = {
+  private[graft] def planeSql(n: String): String = {
     val M = "2147483647"
     val h1 = s"(($n) * 2654435761 + 123456789) % $M"
     val h2 = s"(($h1) * ($h1) % $M + ($h1)) % $M"
@@ -174,31 +155,21 @@ object Similarity {
     * ([[graft.streaming.StatefulOps.annAssign]]). Argmax via struct-max
     * aggregation, not a ranking window: partial (map-side) aggregation
     * collapses the centroids×vectors candidate rows BEFORE the shuffle.
-    * Tie-break (ccos DESC, c_id ASC) via max of (ccos, -c_id).
     */
-  def assignToCentroids(s: SparkSession, vectors: DataFrame,
-                        cents: DataFrame): DataFrame = {
-    val cand = vectors.crossJoin(broadcast(cents))
-      .withColumn("ccos", cosine(s, col("v"), col("cv")))
-    if (s.catalog.functionExists("graft_topk"))
-      // argmax as graft_topk(_, _, 1): the TypedImperativeAggregate keeps
-      // the whole group-by in the ObjectHashAggregate regime — the
-      // max(struct)+first(array) fallback has no hash-friendly buffer and
-      // falls to a SortAggregate pair, i.e. the exploded centroids×vectors
-      // stream gets sorted twice (round-11 verdict #3; PlanSpec pins it).
-      // Tie-break (score DESC, id ASC) is graft_topk's native order =
-      // (ccos DESC, c_id ASC), identical to the fallback and the oracles.
-      cand.groupBy(col("vec_id"))
-        .agg(call_function("graft_topk", col("ccos"), col("c_id"), lit(1)).as("top"),
-          first(col("v")).as("v"))
-        .select(col("vec_id"), col("top").getItem(0).getField("id").as("c_id"),
-          col("v"))
-    else
-      cand.groupBy(col("vec_id"))
-        .agg(max(struct(col("ccos"), (-col("c_id")).as("neg_cid"))).as("m"),
-          first(col("v")).as("v"))
-        .select(col("vec_id"), (-col("m.neg_cid")).as("c_id"), col("v"))
-  }
+  def assignToCentroids(vectors: DataFrame, cents: DataFrame): DataFrame =
+    // argmax as graft_topk(_, _, 1): the TypedImperativeAggregate keeps
+    // the whole group-by in the ObjectHashAggregate regime, where a
+    // max(struct)+first(array) pair falls to SortAggregate, i.e. the
+    // exploded centroids×vectors stream gets sorted twice (round-11
+    // verdict #3; PlanSpec pins it). Tie-break (score DESC, id ASC) is
+    // graft_topk's native order = (ccos DESC, c_id ASC), as in the oracles.
+    vectors.crossJoin(broadcast(cents))
+      .withColumn("ccos", cosine(col("v"), col("cv")))
+      .groupBy(col("vec_id"))
+      .agg(call_function("graft_topk", col("ccos"), col("c_id"), lit(1)).as("top"),
+        first(col("v")).as("v"))
+      .select(col("vec_id"), col("top").getItem(0).getField("id").as("c_id"),
+        col("v"))
 
   /** Per-key exact fixed-point mean vectors: (key, …, v) rows →
     * (key, mv). floor(x·2^20) BIGINT sums are order-free, so the mean is
@@ -236,7 +207,7 @@ object Similarity {
     // sums): integer addition is order-free, so the mean is identical at
     // any parallelism and in the DuckDB oracle.
     def recenter(cents: DataFrame): DataFrame = {
-      val means = fixedPointMeans(assignToCentroids(s, e, cents), "c_id")
+      val means = fixedPointMeans(assignToCentroids(e, cents), "c_id")
       cents.join(means, Seq("c_id"), "left")
         .select(col("c_id"), coalesce(col("mv"), col("cv")).as("cv"))
     }
@@ -256,24 +227,16 @@ object Similarity {
   }
 
   /** (q_id, n_id, cos) candidates → per-query top-k, rank 1..k by
-    * (cos DESC, n_id ASC). Native path: the graft_topk bounded-heap
-    * aggregate — partial aggregation collapses every partition's
-    * candidates to ≤ k rows BEFORE the per-query shuffle. Fallback: the
-    * ranking window (identical result; shuffles all candidates).
+    * (cos DESC, n_id ASC), via the graft_topk bounded-heap aggregate —
+    * partial aggregation collapses every partition's candidates to ≤ k
+    * rows BEFORE the per-query shuffle.
     */
-  private def topkPerQuery(s: SparkSession, cand: DataFrame, k: Int): DataFrame =
-    if (s.catalog.functionExists("graft_topk")) {
-      cand.groupBy(col("q_id"))
-        .agg(call_function("graft_topk", col("cos"), col("n_id"), lit(k)).as("top"))
-        .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("q_id"), col("t.id").as("n_id"),
-          (col("pos") + 1).cast("int").as("rk"), round(col("t.score"), 4).as("cos"))
-    } else {
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-      cand.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-        .select(col("q_id"), col("n_id"), col("rk"), round(col("cos"), 4).as("cos"))
-    }
+  private def topkPerQuery(cand: DataFrame, k: Int): DataFrame =
+    cand.groupBy(col("q_id"))
+      .agg(call_function("graft_topk", col("cos"), col("n_id"), lit(k)).as("top"))
+      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("q_id"), col("t.id").as("n_id"),
+        (col("pos") + 1).cast("int").as("rk"), round(col("t.score"), 4).as("cos"))
 
   /** SQL fragment: cosine between two DOUBLE-list columns. */
   private[queries] def sqlCos(a: String, b: String): String =
@@ -290,27 +253,18 @@ object Similarity {
     * bounded heap before the per-query shuffle. Shared by q51 and
     * q132's dense hybrid leg.
     */
-  def ivfSearchTopK(s: SparkSession, assign: DataFrame, queries: DataFrame,
+  def ivfSearchTopK(assign: DataFrame, queries: DataFrame,
                     cents: DataFrame, probes: Int, k: Int): DataFrame = {
-    val qCand = queries.crossJoin(broadcast(cents))
-      .withColumn("qcos", cosine(s, col("qv"), col("cv")))
-    val probed =
-      if (s.catalog.functionExists("graft_topk"))
-        qCand.groupBy(col("q_id"))
-          .agg(call_function("graft_topk", col("qcos"), col("c_id"),
-            lit(probes)).as("top"), first(col("qv")).as("qv"))
-          .select(col("q_id"), col("qv"), explode(col("top.id")).as("c_id"))
-      else {
-        val wProbe = Window.partitionBy(col("q_id"))
-          .orderBy(col("qcos").desc, col("c_id").asc)
-        qCand.withColumn("rn", row_number().over(wProbe))
-          .filter(col("rn") <= probes)
-          .select(col("q_id"), col("qv"), col("c_id"))
-      }
-    topkPerQuery(s, probed.join(assign, "c_id")
+    val probed = queries.crossJoin(broadcast(cents))
+      .withColumn("qcos", cosine(col("qv"), col("cv")))
+      .groupBy(col("q_id"))
+      .agg(call_function("graft_topk", col("qcos"), col("c_id"),
+        lit(probes)).as("top"), first(col("qv")).as("qv"))
+      .select(col("q_id"), col("qv"), explode(col("top.id")).as("c_id"))
+    topkPerQuery(probed.join(assign, "c_id")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        cosine(s, col("qv"), col("v")).as("cos")), k)
+        cosine(col("qv"), col("v")).as("cos")), k)
   }
 
   /** q134's edge pipeline, shared by every graph-derived operator
@@ -322,7 +276,7 @@ object Similarity {
   def knnEdges(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d)
     val cents = trainCentroids(s, d)
-    ivfSearchTopK(s, assignToCentroids(s, e, cents),
+    ivfSearchTopK(assignToCentroids(e, cents),
       e.select(col("vec_id").as("q_id"), col("v").as("qv")),
       cents, KnnProbes, KnnK)
   }
@@ -379,10 +333,10 @@ object Similarity {
   def semDedupAssign(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d)
     val cents = trainCentroids(s, d)
-    assignToCentroids(s, e, cents)
+    assignToCentroids(e, cents)
       .join(broadcast(cents), Seq("c_id"))
       .select(col("c_id"), col("vec_id"), col("v"),
-        cosine(s, col("v"), col("cv")).as("cosc"))
+        cosine(col("v"), col("cv")).as("cosc"))
       .repartition(col("c_id"))
   }
 
@@ -390,7 +344,7 @@ object Similarity {
     * rollup: within each cluster, a vector is a dup if any
     * closer-to-centroid member sits at cosine ≥ [[SemDedupTau]].
     */
-  def semDedupFlags(s: SparkSession, wc: DataFrame): DataFrame = {
+  def semDedupFlags(wc: DataFrame): DataFrame = {
     val a = wc.select(col("c_id"), col("vec_id").as("a_id"),
       col("v").as("av"), col("cosc").as("a_cosc"))
     val b = wc.select(col("c_id"), col("vec_id").as("b_id"),
@@ -398,7 +352,7 @@ object Similarity {
     val dup = a.join(b, Seq("c_id"))
       .filter(col("a_cosc") < col("b_cosc") ||
         (col("a_cosc") === col("b_cosc") && col("a_id") < col("b_id")))
-      .filter(cosine(s, col("av"), col("bv")) >= SemDedupTau)
+      .filter(cosine(col("av"), col("bv")) >= SemDedupTau)
       .select(col("b_id").as("vec_id")).distinct()
     wc.join(dup.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("c_id"), round(col("cosc"), 4).as("cosc"),
@@ -516,11 +470,11 @@ object Similarity {
     * corpus probed by every new query batch or stream
     * ([[graft.streaming.StatefulOps.annSearch]]).
     */
-  def searchTopK(s: SparkSession, corpus: DataFrame, queries: DataFrame,
+  def searchTopK(corpus: DataFrame, queries: DataFrame,
                  k: Int): DataFrame =
-    topkPerQuery(s, corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+    topkPerQuery(corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        cosine(s, col("qv"), col("v")).as("cos")), k)
+        cosine(col("qv"), col("v")).as("cos")), k)
 
   def defs: ListMap[String, Q] = ListMap(
 
@@ -528,7 +482,7 @@ object Similarity {
     "q50_ann_brute" -> Q(
       (s, d) => {
         val e = vecs(s, d)
-        searchTopK(s, e, e.filter(col("vec_id") < NumQueries)
+        searchTopK(e, e.filter(col("vec_id") < NumQueries)
           .select(col("vec_id").as("q_id"), col("v").as("qv")), TopK)
       },
       Some(s"""WITH e AS (SELECT vec_id,
@@ -557,7 +511,7 @@ object Similarity {
         // pipeline lives in [[ivfSearchTopK]] (shared with q132's dense
         // hybrid leg; all bounded-heap aggregates, no ranking window)
         val cents = trainCentroids(s, d)
-        ivfSearchTopK(s, assignToCentroids(s, e, cents),
+        ivfSearchTopK(assignToCentroids(e, cents),
           e.filter(col("vec_id") < NumQueries)
             .select(col("vec_id").as("q_id"), col("v").as("qv")),
           cents, Probes, TopK)
@@ -586,10 +540,10 @@ object Similarity {
       probe = Some((s, d) => {
         val e = vecs(s, d)
         val cents = trainCentroids(s, d)
-        val assign = assignToCentroids(s, e, cents)
+        val assign = assignToCentroids(e, cents)
           .persistTracked
         assign.count()
-        () => ivfSearchTopK(s, assign,
+        () => ivfSearchTopK(assign,
           e.filter(col("vec_id") < NumQueries)
             .select(col("vec_id").as("q_id"), col("v").as("qv")),
           cents, Probes, TopK)
@@ -612,13 +566,10 @@ object Similarity {
       (s, d) => {
         val e = vecs(s, d)
         // per-row signature: no shuffle, no explode — SigBits × dim
-        // multiply-adds inside one projection. Native kernel when the
-        // extension is registered (primitive loop); interpreted-HOF
-        // fallback otherwise — bit-identical (AnnRecallSpec asserts it).
+        // multiply-adds inside one native projection (AnnRecallSpec pins
+        // it against the interpreted-HOF reference)
         val sigs = e.withColumn("sg",
-          if (s.catalog.functionExists("graft_srpsig"))
-            call_function("graft_srpsig", col("v"), lit(SigBits))
-          else srpSigHof("v"))
+          call_function("graft_srpsig", col("v"), lit(SigBits)))
         val qsig = sigs.filter(col("vec_id") < NumQueries)
           .select(col("vec_id").as("q_id"), col("v").as("qv"), col("sg").as("qsg"))
         // Hamming pass: corpus carries only (id, signature) — vectors
@@ -627,28 +578,18 @@ object Similarity {
           .join(broadcast(qsig.select(col("q_id"), col("qsg"))),
             col("n_id") =!= col("q_id"))
           .select(col("q_id"), col("n_id"),
-            (if (s.catalog.functionExists("graft_hamming"))
-               call_function("graft_hamming", col("qsg"), col("sg"))
-             else hammingHof("qsg", "sg")).as("ham"))
-        val cand =
-          if (s.catalog.functionExists("graft_topk"))
-            hams.groupBy(col("q_id"))
-              .agg(call_function("graft_topk",
-                (-col("ham")).cast("double"), col("n_id"), lit(HammingCandidates)).as("top"))
-              .select(col("q_id"), explode(col("top.id")).as("n_id"))
-          else {
-            val w = Window.partitionBy(col("q_id")).orderBy(col("ham").asc, col("n_id").asc)
-            hams.withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= HammingCandidates)
-              .select(col("q_id"), col("n_id"))
-          }
+            call_function("graft_hamming", col("qsg"), col("sg")).as("ham"))
+        val cand = hams.groupBy(col("q_id"))
+          .agg(call_function("graft_topk",
+            (-col("ham")).cast("double"), col("n_id"), lit(HammingCandidates)).as("top"))
+          .select(col("q_id"), explode(col("top.id")).as("n_id"))
         // exact re-rank: fetch vectors for the C×Q surviving candidates
         // via broadcast joins (candidate list is tiny by construction)
-        topkPerQuery(s, e.select(col("vec_id").as("n_id"), col("v"))
+        topkPerQuery(e.select(col("vec_id").as("n_id"), col("v"))
           .join(broadcast(cand), Seq("n_id"))
           .join(broadcast(qsig.select(col("q_id"), col("qv"))), Seq("q_id"))
           .select(col("q_id"), col("n_id"),
-            cosine(s, col("qv"), col("v")).as("cos")), TopK)
+            cosine(col("qv"), col("v")).as("cos")), TopK)
       },
       Some(s"""WITH e AS (SELECT vec_id,
               |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -697,26 +638,18 @@ object Similarity {
         // vectors surface at RANK 1 in both engines instead of breaking
         // the bounded-heap admit test (NaN fails both > and ==) or
         // silently sorting last/NULLs-last. Spec: planted zero vector.
-        val rawCos = cosine(s, col("v"), col("mv"))
+        val rawCos = cosine(col("v"), col("mv"))
         val sc = e.join(broadcast(cents), Seq("label"))
           .select(col("label"), col("vec_id"),
             when(rawCos.isNull || isnan(rawCos), lit(-1.0))
               .otherwise(rawCos).as("cos"))
-        if (s.catalog.functionExists("graft_topk")) {
-          sc.groupBy(col("label"))
-            .agg(call_function("graft_topk", -col("cos"), col("vec_id"),
-              lit(OutlierK)).as("top"))
-            .select(col("label"), posexplode(col("top")).as(Seq("pos", "t")))
-            .select(col("label"), col("t.id").as("vec_id"),
-              (col("pos") + 1).cast("int").as("rk"),
-              round(-col("t.score"), 4).as("cos"))
-        } else {
-          val w = Window.partitionBy(col("label"))
-            .orderBy(col("cos").asc, col("vec_id").asc)
-          sc.withColumn("rk", row_number().over(w)).filter(col("rk") <= OutlierK)
-            .select(col("label"), col("vec_id"), col("rk"),
-              round(col("cos"), 4).as("cos"))
-        }
+        sc.groupBy(col("label"))
+          .agg(call_function("graft_topk", -col("cos"), col("vec_id"),
+            lit(OutlierK)).as("top"))
+          .select(col("label"), posexplode(col("top")).as(Seq("pos", "t")))
+          .select(col("label"), col("t.id").as("vec_id"),
+            (col("pos") + 1).cast("int").as("rk"),
+            round(-col("t.score"), 4).as("cos"))
       },
       Some(s"""WITH e AS (SELECT vec_id, label,
               |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -765,7 +698,7 @@ object Similarity {
       // below: semDedupFlags probes it three times (both self-join legs
       // + the final flag join), which pre-round-16 rebuilt the whole
       // cross-join assignment per leg (duplicate-subtree lint finding)
-      (s, d) => semDedupFlags(s, semDedupAssign(s, d)
+      (s, d) => semDedupFlags(semDedupAssign(s, d)
         .persistTracked),
       Some(s"""WITH e AS (SELECT vec_id,
               |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -791,7 +724,7 @@ object Similarity {
         val wc = semDedupAssign(s, d)
           .persistTracked
         wc.count()
-        () => semDedupFlags(s, wc)
+        () => semDedupFlags(wc)
       })),
 
     // ---- kNN graph (the all-vectors form of q51): every vector's
@@ -816,10 +749,10 @@ object Similarity {
       probe = Some((s, d) => {
         val e = vecs(s, d)
         val cents = trainCentroids(s, d)
-        val assign = assignToCentroids(s, e, cents)
+        val assign = assignToCentroids(e, cents)
           .persistTracked
         assign.count()
-        () => ivfSearchTopK(s, assign,
+        () => ivfSearchTopK(assign,
           e.select(col("vec_id").as("q_id"), col("v").as("qv")),
           cents, KnnProbes, KnnK)
       })),
@@ -849,18 +782,9 @@ object Similarity {
             (col("fsum").cast("double") / lit(FixedPointScale.toDouble) /
               col("n").cast("double")).as("mean_cos"))
           .persistTracked
-        val flagged =
-          if (s.catalog.functionExists("graft_topk"))
-            scores.agg(call_function("graft_topk", -col("mean_cos"),
-                col("vec_id"), lit(OutlierK)).as("top"))
-              .select(explode(col("top.id")).as("vec_id"),
-                lit(true).as("is_outlier"))
-          else {
-            val w = Window.orderBy(col("mean_cos").asc, col("vec_id").asc)
-            scores.withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= OutlierK)
-              .select(col("vec_id"), lit(true).as("is_outlier"))
-          }
+        val flagged = scores.agg(call_function("graft_topk", -col("mean_cos"),
+            col("vec_id"), lit(OutlierK)).as("top"))
+          .select(explode(col("top.id")).as("vec_id"), lit(true).as("is_outlier"))
         scores.join(broadcast(flagged), Seq("vec_id"), "left")
           .select(col("vec_id"), round(col("mean_cos"), 4).as("mean_cos"),
             coalesce(col("is_outlier"), lit(false)).as("is_outlier"))
@@ -919,23 +843,14 @@ object Similarity {
         val c = semanticClusters(s, d)
           .select(col("vec_id"), col("cluster_id"), col("cluster_size"))
           .withColumn("h", h)
-        if (s.catalog.functionExists("graft_topk"))
-          c.groupBy(col("cluster_id"))
-            .agg(call_function("graft_topk", (-col("h")).cast("double"),
-                col("vec_id"), lit(ClusterSampleM)).as("top"),
-              first(col("cluster_size")).as("cluster_size"))
-            .select(col("cluster_id"), col("cluster_size"),
-              posexplode(col("top")).as(Seq("pos", "t")))
-            .select(col("cluster_id"), col("t.id").as("vec_id"),
-              (col("pos") + 1).cast("int").as("rn"), col("cluster_size"))
-        else {
-          val w = Window.partitionBy(col("cluster_id"))
-            .orderBy(col("h").asc, col("vec_id").asc)
-          c.withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= ClusterSampleM)
-            .select(col("cluster_id"), col("vec_id"),
-              col("rn").cast("int").as("rn"), col("cluster_size"))
-        }
+        c.groupBy(col("cluster_id"))
+          .agg(call_function("graft_topk", (-col("h")).cast("double"),
+              col("vec_id"), lit(ClusterSampleM)).as("top"),
+            first(col("cluster_size")).as("cluster_size"))
+          .select(col("cluster_id"), col("cluster_size"),
+            posexplode(col("top")).as(Seq("pos", "t")))
+          .select(col("cluster_id"), col("t.id").as("vec_id"),
+            (col("pos") + 1).cast("int").as("rn"), col("cluster_size"))
       },
       Some(semanticClustersOracleCte + s"""
            |SELECT cluster_id, vec_id, CAST(rn AS INT) AS rn, cluster_size FROM (
@@ -1046,38 +961,26 @@ object Similarity {
         val j = knnEdges(s, d)
           .join(lab.select(col("vec_id").as("q_id"), col("label").as("a_label")), "q_id")
           .join(lab.select(col("vec_id").as("n_id"), col("label").as("n_label")), "n_id")
-        if (s.catalog.functionExists("graft_topk"))
-          // conditional argmax as graft_topk(_,_,1) over a null-masked
-          // score (null inputs are skipped): the TypedImperativeAggregate
-          // keeps the edge-set aggregate in ObjectHashAggregate where the
-          // conditional max(struct) pair fell to SortAggregate — i.e. the
-          // n·KnnK edge stream got sorted per partition (the q51 class).
-          // graft_topk's (score DESC, id ASC) order == (cos, -n_id) max.
-          j.groupBy(col("q_id"), col("a_label"))
-            .agg(
-              call_function("graft_topk",
-                when(col("n_label") === col("a_label"), col("cos")),
-                col("n_id"), lit(1)).as("p"),
-              call_function("graft_topk",
-                when(col("n_label") =!= col("a_label"), col("cos")),
-                col("n_id"), lit(1)).as("ng"))
-            .filter(size(col("p")) > 0 && size(col("ng")) > 0)
-            .select(col("q_id").as("anchor_id"), col("a_label").as("label"),
-              col("p").getItem(0).getField("id").as("pos_id"),
-              col("p").getItem(0).getField("score").as("pos_cos"),
-              col("ng").getItem(0).getField("id").as("neg_id"),
-              col("ng").getItem(0).getField("score").as("neg_cos"))
-        else
-          j.groupBy(col("q_id"), col("a_label"))
-            .agg(
-              max(when(col("n_label") === col("a_label"),
-                struct(col("cos"), (-col("n_id")).as("nid")))).as("p"),
-              max(when(col("n_label") =!= col("a_label"),
-                struct(col("cos"), (-col("n_id")).as("nid")))).as("ng"))
-            .filter(col("p").isNotNull && col("ng").isNotNull)
-            .select(col("q_id").as("anchor_id"), col("a_label").as("label"),
-              (-col("p.nid")).as("pos_id"), col("p.cos").as("pos_cos"),
-              (-col("ng.nid")).as("neg_id"), col("ng.cos").as("neg_cos"))
+        // conditional argmax as graft_topk(_,_,1) over a null-masked
+        // score (null inputs are skipped): the TypedImperativeAggregate
+        // keeps the edge-set aggregate in ObjectHashAggregate where a
+        // conditional max(struct) pair falls to SortAggregate — i.e. the
+        // n·KnnK edge stream gets sorted per partition (the q51 class).
+        // graft_topk's (score DESC, id ASC) order == (cos, -n_id) max.
+        j.groupBy(col("q_id"), col("a_label"))
+          .agg(
+            call_function("graft_topk",
+              when(col("n_label") === col("a_label"), col("cos")),
+              col("n_id"), lit(1)).as("p"),
+            call_function("graft_topk",
+              when(col("n_label") =!= col("a_label"), col("cos")),
+              col("n_id"), lit(1)).as("ng"))
+          .filter(size(col("p")) > 0 && size(col("ng")) > 0)
+          .select(col("q_id").as("anchor_id"), col("a_label").as("label"),
+            col("p").getItem(0).getField("id").as("pos_id"),
+            col("p").getItem(0).getField("score").as("pos_cos"),
+            col("ng").getItem(0).getField("id").as("neg_id"),
+            col("ng").getItem(0).getField("score").as("neg_cos"))
       },
       Some(knnOracleCte + """,
            |lab AS (SELECT vec_id, label FROM embeddings),
@@ -1113,10 +1016,10 @@ object Similarity {
       (s, d) => {
         val e = vecs(s, d)
         val cents = trainCentroids(s, d)
-        val asg = assignToCentroids(s, e, cents)
+        val asg = assignToCentroids(e, cents)
           .join(broadcast(cents), Seq("c_id"))
           .select(col("c_id"), col("vec_id"),
-            cosine(s, col("v"), col("cv")).as("cosc"))
+            cosine(col("v"), col("cv")).as("cosc"))
         val docs = Tables.spread(Tables(s, d, "documents"))
           .select(col("doc_id"), col("source"), col("n_chars"))
         val j = asg.join(docs, asg("vec_id") === docs("doc_id"))
@@ -1229,14 +1132,14 @@ object Similarity {
     //      graft_gram TypedImperativeAggregate keeps ONE 2080-long
     //      buffer per partition (map-side merged, MLlib's
     //      computeGramianMatrix shape) instead of exploding n·d²/2
-    //      product rows through the shuffle; the declarative explode
-    //      fallback below it is bit-identical (GramSpec parity).
+    //      product rows through the shuffle (GramSpec pins it against
+    //      the declarative explode form).
     "q200_embed_gram" -> Q(
       (s, d) => {
         val q = Tables.spread(Tables(s, d, "embeddings")).select(expr(
           "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 65536.0D) AS BIGINT))")
           .as("v"))
-        val tri = gramTriAgg(s, q)
+        val tri = gramTriAgg(q)
         // (i, j) recovered positionally: the broadcast index map is the
         // SAME row-major flatten the kernel writes, so pos == tri index
         val ij = s.range(1).select(posexplode(expr(
@@ -1284,7 +1187,7 @@ object Similarity {
           "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 256.0D) AS BIGINT))")
           .as("v"))
           .persistTracked
-        val agg = gramTriAgg(s, q).crossJoin(broadcast(
+        val agg = gramTriAgg(q).crossJoin(broadcast(
           q.agg(count(lit(1)).as("n"),
             expr("aggregate(collect_list(v), CAST(array() AS ARRAY<BIGINT>), " +
               "(acc, x) -> CASE WHEN size(acc) = 0 THEN x " +
@@ -1371,7 +1274,7 @@ object Similarity {
     "q212_dominant_direction" -> Q(
       (s, d) => {
         val q = quantizedEmbeddings(s, d)
-        val v = fitDominantDirection(s, q)
+        val v = fitDominantDirection(q)
         val vLit = v.mkString("array(", "L, ", "L)")
         q.select(col("vec_id"), expr(
           s"aggregate(zip_with(v, $vLit, (a, b) -> a * b), 0L, (acc, x) -> acc + x)")
@@ -1403,7 +1306,7 @@ object Similarity {
     "q225_residual_norms" -> Q(
       (s, d) => {
         val q = quantizedEmbeddings(s, d)
-        val v = fitDominantDirection(s, q)
+        val v = fitDominantDirection(q)
         val vv = v.foldLeft(0L)((acc, x) => acc + x * x)
         val vLit = v.mkString("array(", "L, ", "L)")
         q.select(col("vec_id"),
@@ -1451,9 +1354,9 @@ object Similarity {
         val queries = e.filter(col("vec_id") < NumQueries)
           .select(col("vec_id").as("q_id"), col("v").as("qv"))
         val cents = trainCentroids(s, d)
-        val ivf = ivfSearchTopK(s, assignToCentroids(s, e, cents),
+        val ivf = ivfSearchTopK(assignToCentroids(e, cents),
           queries, cents, Probes, TopK)
-        val brute = searchTopK(s, e, queries, TopK)
+        val brute = searchTopK(e, queries, TopK)
         val ov = brute.select(col("q_id"), col("n_id"), col("rk").as("rb"))
           .join(ivf.select(col("q_id"), col("n_id"), col("rk").as("ri")),
             Seq("q_id", "n_id"))
@@ -1570,8 +1473,8 @@ object Similarity {
     * JVM `/` ≡ DuckDB `//`, k0 = 0 at fixture scale), then PowerIters
     * multiply-renormalize rounds in exact integers.
     */
-  private def fitDominantDirection(s: SparkSession, q: DataFrame): Array[Long] = {
-    val tri = gramTriAgg(s, q.select(col("v")))
+  private def fitDominantDirection(q: DataFrame): Array[Long] = {
+    val tri = gramTriAgg(q.select(col("v")))
       .collect()(0).getSeq[Long](0)
     val maxAbsG = tri.foldLeft(0L)((m, x) => math.max(m, math.abs(x)))
     val k0 = math.max(
@@ -1614,23 +1517,10 @@ object Similarity {
   }
 
   /** q200/q212's exact upper-triangle Gram aggregate over an ARRAY<BIGINT>
-    * column `v`: the native graft_gram TypedImperativeAggregate when the
-    * extension is registered, else a bit-identical declarative fallback
-    * (per-row row-major triangle products, element-wise array-sum fold —
-    * GramSpec pins the parity).
+    * column `v`: the native graft_gram TypedImperativeAggregate.
     */
-  private def gramTriAgg(s: SparkSession, q: DataFrame): DataFrame =
-    if (s.catalog.functionExists("graft_gram"))
-      q.agg(call_function("graft_gram", col("v")).as("g"))
-    else
-      q.select(expr(
-        "flatten(transform(sequence(0, size(v) - 1), " +
-          "i -> transform(sequence(i, size(v) - 1), j -> v[i] * v[j])))")
-        .as("p"))
-        .agg(expr(
-          "aggregate(collect_list(p), CAST(array() AS ARRAY<BIGINT>), " +
-            "(acc, x) -> CASE WHEN size(acc) = 0 THEN x " +
-            "ELSE zip_with(acc, x, (a, b) -> a + b) END)").as("g"))
+  private def gramTriAgg(q: DataFrame): DataFrame =
+    q.agg(call_function("graft_gram", col("v")).as("g"))
 
   /** q152's kernel over any canonical undirected edge set (a < b per
     * row, deduplicated): per-vertex degree, triangle count, and local

@@ -99,11 +99,9 @@ object TextAnalysis {
        |    ORDER BY fsc DESC, n_id) AS rk FROM sc)
        |WHERE rk <= $Bm25TopK""".stripMargin
 
-  /** Native bounded-vocab fold (Σ vocab.getOrElse(token, dflt)) when
-    * the extensions are registered; callers keep their bit-identical
-    * HOF fallbacks for extension-less sessions. Keys ship SORTED in
-    * UTF8 byte order (the kernel binary-searches; the registry builder
-    * re-verifies the order at plan build).
+  /** Native bounded-vocab fold (Σ vocab.getOrElse(token, dflt)). Keys
+    * ship SORTED in UTF8 byte order (the kernel binary-searches; the
+    * registry builder re-verifies the order at plan build).
     */
   private[graft] def vocabSumNative(toks: Column, m: Map[String, Long],
                                     dflt: Long): Column = {
@@ -114,24 +112,19 @@ object TextAnalysis {
       typedLit(kv.map(_._1)), typedLit(kv.map(_._2)), lit(dflt))
   }
 
-  private[graft] def nativeVocab(s: SparkSession): Boolean =
-    s.catalog.functionExists("graft_vocab_sum")
-
-  def markerCount(s: SparkSession, toks: Column, words: Seq[String]): Column =
+  def markerCount(toks: Column, words: Seq[String]): Column =
     // the kernel fold (vals = 1, dflt = 0) replaces an interpreted
     // filter(toks, OR-chain) per row — the q90/q113/q135 gates' lang
     // and stopword counts run this over every corpus token
-    if (nativeVocab(s))
-      vocabSumNative(toks, words.map(_ -> 1L).toMap, 0L).cast("int")
-    else size(filter(toks, t => words.map(t === _).reduce(_ || _)))
+    vocabSumNative(toks, words.map(_ -> 1L).toMap, 0L).cast("int")
 
   /** q60's marker-argmax prediction with fixed precedence
     * en > es > fr > de on ties — shared by q60, q115, and (via
     * `=== "en"`) the q90/q113 language gate. One copy of the rule; the
     * oracle SQL mirrors build their word lists from [[markers]].
     */
-  def predictedLang(s: SparkSession, toks: Column): Column = {
-    val sc = markers.map { case (l, ws) => l -> markerCount(s, toks, ws) }.toMap
+  def predictedLang(toks: Column): Column = {
+    val sc = markers.map { case (l, ws) => l -> markerCount(toks, ws) }.toMap
     when(sc("en") >= sc("es") && sc("en") >= sc("fr") && sc("en") >= sc("de"), "en")
       .when(sc("es") >= sc("fr") && sc("es") >= sc("de"), "es")
       .when(sc("fr") >= sc("de"), "fr")
@@ -151,7 +144,7 @@ object TextAnalysis {
     //      fixed precedence (en > es > fr > de) on ties.
     "q60_langid" -> Q(
       (s, d) => {
-        val pred = predictedLang(s, split(col("text"), " "))
+        val pred = predictedLang(split(col("text"), " "))
         Tables.spread(Tables(s, d, "documents"))
           .select(col("doc_id"), pred.as("pred_lang"),
             (pred === col("lang")).as("is_match"))
@@ -190,8 +183,7 @@ object TextAnalysis {
         // the empty document ([""], 0 = 0 − 0)
         val sumLen = length(col("text")) - (nTok - lit(1))
         // stopword count through the codegen'd bounded-vocab kernel
-        // (HOF filter fallback inside markerCount is bit-identical)
-        val nStop = markerCount(s, toks, StopWords)
+        val nStop = markerCount(toks, StopWords)
         val stopRatio = nStop.cast("double") / nTok
         val score = least(lit(1.0), nTok / lit(100.0)) * (lit(1.0) - stopRatio)
         Tables.spread(Tables(s, d, "documents")).select(
@@ -275,13 +267,9 @@ object TextAnalysis {
       (s, d) => {
         def toks = Tables.spread(Tables(s, d, "documents"))
           .select(explode(split(col("text"), " ")).as("token"))
-        // No silent degradation: the exact-distinct "fallback" would be
-        // precisely the unbounded-state scan the sketch exists to avoid
-        // at 100 TB. The extension is registered by Verify, Bench, Agent
-        // and every spec session; a stripped session must fail loudly.
-        require(s.catalog.functionExists("graft_mg_candidates"),
-          "q65_heavy_hitters needs the graft_mg_candidates native aggregate — " +
-            "build the session with GraftExtensions")
+        // No exact-distinct alternative: it would be precisely the
+        // unbounded-state scan the sketch exists to avoid at 100 TB.
+        // SparkEntry installs the kernels on any session it builds for.
         val cand =
           toks.agg(call_function("graft_mg_candidates", col("token"), lit(4096)).as("c"))
             .select(explode(col("c")).as("token"))
@@ -349,16 +337,15 @@ object TextAnalysis {
     //      by its single most frequent token, and of its 2-gram instances
     //      taken by its most frequent 2-gram. A doc can pass q96's
     //      duplicated-n-gram fractions while one keyword-stuffed term
-    //      dominates — concentration catches that axis. Pure per-row HOF
-    //      arithmetic in the scan stage (zero shuffles at any corpus
-    //      size); the count-per-distinct-gram inner scan is
-    //      O(distinct × n) per row — bounded by doc length, not corpus.
+    //      dominates — concentration catches that axis. One O(n)
+    //      per-row kernel pass in the scan stage (zero shuffles at any
+    //      corpus size) — bounded by doc length, not corpus.
     //      Fractions are exact count/count IEEE divisions (bit-identical
     //      across engines, no rounding needed).
     "q109_topgram_concentration" -> Q(
       (s, d) => {
         Tables.spread(Tables(s, d, "documents"))
-          .select(col("doc_id"), concentration(s, col("text")).as("c"))
+          .select(col("doc_id"), concentration(col("text")).as("c"))
           .select(col("doc_id"), col("c.n_tokens").as("n_tokens"),
             col("c.top1_frac").as("top1_frac"),
             col("c.top2_frac").as("top2_frac"),
@@ -474,7 +461,7 @@ object TextAnalysis {
         val w = org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))
         Tables.spread(Tables(s, d, "documents"))
           .select(col("lang"),
-            predictedLang(s, split(col("text"), " ")).as("pred_lang"))
+            predictedLang(split(col("text"), " ")).as("pred_lang"))
           .groupBy(col("lang"), col("pred_lang"))
           .agg(count(lit(1)).as("n_docs"))
           .select(col("lang"), col("pred_lang"), col("n_docs"),
@@ -510,7 +497,7 @@ object TextAnalysis {
     //      hash-agg is the one corpus-sized shuffle (it IS the model
     //      fit); the fitted model is V rows — collected once into a map
     //      literal (the q51 trained-centroid precedent: a bounded model
-    //      artifact, not data) so scoring is a zero-shuffle per-row HOF
+    //      artifact, not data) so scoring is a zero-shuffle per-row fold
     //      in the scan stage. Mean bits/token is one exact BIGINT-sum /
     //      count division.
     "q118_doc_surprisal" -> Q(
@@ -727,7 +714,7 @@ object TextAnalysis {
     "q128_hybrid_rrf" -> Q(
       (s, d) => {
         val e = Similarity.vecs(s, d)
-        val den = Similarity.searchTopK(s, e,
+        val den = Similarity.searchTopK(e,
           e.filter(col("vec_id") < Bm25Queries)
             .select(col("vec_id").as("q_id"), col("v").as("qv")), Bm25TopK)
         rrfFuse(bm25SelfRank(s, d), den, Bm25TopK)
@@ -819,8 +806,8 @@ object TextAnalysis {
       (s, d) => {
         val e = Similarity.vecs(s, d)
         val cents = Similarity.trainCentroids(s, d)
-        val den = Similarity.ivfSearchTopK(s,
-          Similarity.assignToCentroids(s, e, cents),
+        val den = Similarity.ivfSearchTopK(
+          Similarity.assignToCentroids(e, cents),
           e.filter(col("vec_id") < Bm25Queries)
             .select(col("vec_id").as("q_id"), col("v").as("qv")),
           cents, Similarity.HybridProbes, Bm25TopK)
@@ -898,7 +885,7 @@ object TextAnalysis {
         val idx = persistedBm25Index(docs)
         val e = Similarity.vecs(s, d)
         val cents = Similarity.trainCentroids(s, d)
-        val assign = Similarity.assignToCentroids(s, e, cents)
+        val assign = Similarity.assignToCentroids(e, cents)
           .persistTracked
         assign.count()
         val queries = docs.filter(col("doc_id") < Bm25Queries)
@@ -907,7 +894,7 @@ object TextAnalysis {
             Seq("q_id"))
         () => rrfFuse(
           bm25Probe(queries.select(col("q_id"), col("text")), idx, Bm25TopK),
-          Similarity.ivfSearchTopK(s, assign,
+          Similarity.ivfSearchTopK(assign,
             queries.select(col("q_id"), col("qv")),
             cents, Similarity.HybridProbes, Bm25TopK), Bm25TopK)
       })),
@@ -1291,18 +1278,14 @@ object TextAnalysis {
     //      IEEE division of exact integers (q175's precedent; no
     //      log/exp, which is why Simpson and not Shannon entropy:
     //      libm's log is not cross-engine bit-stable). 100 TB shape:
-    //      pure scan-stage per-doc HOF — ZERO shuffles; the oracle's
+    //      pure scan-stage per-doc kernel — ZERO shuffles; the oracle's
     //      unnest+groupBy restates it relationally.
     "q180_token_diversity" -> Q(
       (s, d) => {
-        // one codegen'd O(n) hash-count pass when the kernel is
-        // registered; the interpreted run-length fold over
-        // sort_array(split(text, ' ')) is the bit-identical fallback
-        // (all-integer counts, so order is immaterial — see
+        // one codegen'd O(n) hash-count pass (TextKernelSpec pins it
+        // against the interpreted run-length fold; see
         // TextKernels.diversity for the Σ(2k−1) = c² parity argument)
-        val st = if (s.catalog.functionExists("graft_diversity"))
-          call_function("graft_diversity", col("text"))
-        else diversityHof
+        val st = call_function("graft_diversity", col("text"))
         Tables.spread(Tables(s, d, "documents")).select(col("doc_id"),
             st.as("st"))
           .select(col("doc_id"), col("st.n").as("n_tokens"),
@@ -1420,7 +1403,7 @@ object TextAnalysis {
         import s.implicits._
         val e = Similarity.vecs(s, d)
         val lex = bm25SelfRank(s, d)
-        val den = Similarity.searchTopK(s, e,
+        val den = Similarity.searchTopK(e,
           e.filter(col("vec_id") < Bm25Queries)
             .select(col("vec_id").as("q_id"), col("v").as("qv")), Bm25TopK)
         val fused = rrfFuse(lex, den, Bm25TopK)
@@ -1522,45 +1505,19 @@ object TextAnalysis {
 
   /** q109's kernel as ONE reusable stateless projection: n_tokens and
     * top-1/2-gram concentration with the keep verdict, as a struct
-    * Column. Pure per-row HOF arithmetic — streams verbatim (see
+    * Column. Pure per-row arithmetic — streams verbatim (see
     * `StatefulOps.qualityMonitor` for the windowed intake monitor).
     */
-  def concentration(s: SparkSession, text: Column): Column =
-    if (s.catalog.functionExists("graft_concentration")) {
-      // one codegen'd O(n) pass (hash counting) — the HOF fallback below
-      // is O(distinct × n) per row AND interpreted; bit-identical values
-      // (same max-multiplicity ints, same casts, same IEEE divisions),
-      // pinned against the HOF form in TextKernelSpec
-      val c = call_function("graft_concentration", text)
-      struct(
-        c.getField("n_tokens").as("n_tokens"),
-        c.getField("top1_frac").as("top1_frac"),
-        c.getField("top2_frac").as("top2_frac"),
-        (c.getField("top1_frac") <= Top1Max &&
-          c.getField("top2_frac") <= Top2Max).as("keep"))
-    } else concentrationHof(text)
-
-  /** The interpreted-HOF formulation of [[concentration]] — the
-    * extension-less fallback and the parity witness the kernel is
-    * pinned against.
-    */
-  private[graft] def concentrationHof(text: Column): Column = {
-    val t = split(text, " ")
-    def topShare(arr: Column): Column =
-      when(size(arr) === 0, lit(0.0)).otherwise(
-        array_max(transform(array_distinct(arr),
-          g => size(filter(arr, x => x === g)))).cast("double") /
-          size(arr).cast("double"))
-    val g2 = when(size(t) < 2, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(t) - 1),
-        i => concat_ws(" ", element_at(t, i), element_at(t, i + 1))))
-    val top1 = topShare(t)
-    val top2 = topShare(g2)
+  def concentration(text: Column): Column = {
+    // one codegen'd O(n) pass (hash counting), pinned against the
+    // interpreted-HOF form in TextKernelSpec
+    val c = call_function("graft_concentration", text)
     struct(
-      size(t).cast("int").as("n_tokens"),
-      top1.as("top1_frac"),
-      top2.as("top2_frac"),
-      (top1 <= Top1Max && top2 <= Top2Max).as("keep"))
+      c.getField("n_tokens").as("n_tokens"),
+      c.getField("top1_frac").as("top1_frac"),
+      c.getField("top2_frac").as("top2_frac"),
+      (c.getField("top1_frac") <= Top1Max &&
+        c.getField("top2_frac") <= Top2Max).as("keep"))
   }
 
   /** q118's model fit: the corpus's top-V unigram head as token →
@@ -1586,31 +1543,22 @@ object TextAnalysis {
   /** Score candidate (q_id, doc_id, tf, df, dl, n_docs, avgdl) rows and
     * keep the top-k per query: fixed-point order-free term sums, then
     * the graft_topk bounded heap (candidates collapse to ≤ k per
-    * partition BEFORE the per-query shuffle; ranking-window fallback is
-    * result-identical). Shared by q125 and [[bm25Probe]].
+    * partition BEFORE the per-query shuffle). Shared by q125 and
+    * [[bm25Probe]].
     */
-  private def bm25Rank(s: SparkSession, cand: DataFrame, k: Int): DataFrame = {
-    val sc = cand
+  private def bm25Rank(cand: DataFrame, k: Int): DataFrame =
+    cand
       .withColumn("tsc", bm25TscExpr)
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(expr(s"CAST(floor(tsc * $FixedPoint.0D) AS BIGINT)")).as("fsc"))
       .select(col("q_id"), col("doc_id").as("n_id"),
         (col("fsc").cast("double") / lit(FixedPoint.toDouble)).as("score"))
-    if (s.catalog.functionExists("graft_topk")) {
-      sc.groupBy(col("q_id"))
-        .agg(call_function("graft_topk", col("score"), col("n_id"),
-          lit(k)).as("top"))
-        .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("q_id"), col("t.id").as("n_id"),
-          (col("pos") + 1).cast("int").as("rk"), col("t.score").as("score"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-      sc.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-        .select(col("q_id"), col("n_id"), col("rk").cast("int").as("rk"),
-          col("score"))
-    }
-  }
+      .groupBy(col("q_id"))
+      .agg(call_function("graft_topk", col("score"), col("n_id"),
+        lit(k)).as("top"))
+      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("q_id"), col("t.id").as("n_id"),
+        (col("pos") + 1).cast("int").as("rk"), col("t.score").as("score"))
 
   /** q125's one-shot self-retrieval: the first [[Bm25Queries]] docs as
     * queries against the whole corpus, top [[Bm25TopK]] by exact
@@ -1656,7 +1604,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
       .persistTracked
     val dft = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    bm25Rank(s,
+    bm25Rank(
       post.join(broadcast(dft), Seq("term"))
         .crossJoin(broadcast(tot))
         .join(broadcast(qterms), Seq("term"))
@@ -1673,8 +1621,7 @@ object TextAnalysis {
     * per query regardless of corpus size.
     */
   def rrfFuse(lex: DataFrame, den: DataFrame, k: Int): DataFrame =
-    rrfFuseVia(lex, den, k,
-      useHeap = lex.sparkSession.catalog.functionExists("graft_topk"))
+    rrfFuseVia(lex, den, k, useHeap = true)
 
   /** [[rrfFuse]] with the path pinned, for the parity spec. The heap
     * path mirrors the legs' graft_topk shape: because the heap carries
@@ -1683,9 +1630,9 @@ object TextAnalysis {
     * 47+8+8-bit BIGINT (ranks ≤ k ≤ 255 by construction here; the
     * 47-bit id contract is enforced with raise_error, and n_id owns the
     * high bits so heap tie-order (score DESC, id ASC) still breaks ties
-    * by n_id ASC exactly like the window's ORDER BY). Falls back to the
-    * ranking window — same result, one extra shuffle of the ≤ 2k-per-
-    * query fused rows — when the kernel is absent or k needs > 8 bits.
+    * by n_id ASC exactly like the window's ORDER BY). Takes the ranking
+    * window — same result, one extra shuffle of the ≤ 2k-per-query
+    * fused rows — when k needs > 8 bits.
     */
   private[graft] def rrfFuseVia(lex: DataFrame, den: DataFrame, k: Int,
       useHeap: Boolean): DataFrame = {
@@ -1778,7 +1725,7 @@ object TextAnalysis {
   def bm25Probe(queries: DataFrame, idx: Bm25Index, k: Int): DataFrame = {
     val qterms = queries.select(col("q_id"),
       explode(array_distinct(split(col("text"), " "))).as("term"))
-    bm25Rank(queries.sparkSession,
+    bm25Rank(
       idx.post.join(broadcast(qterms), Seq("term"))
         .crossJoin(broadcast(idx.tot)), k)
   }
@@ -1794,7 +1741,7 @@ object TextAnalysis {
                   k: Int): DataFrame =
     rrfFuse(
       bm25Probe(queries.select(col("q_id"), col("text")), idx, k),
-      Similarity.searchTopK(queries.sparkSession, corpus,
+      Similarity.searchTopK(corpus,
         queries.select(col("q_id"), col("qv")), k), k)
 
   /** One fitted Naive-Bayes class (q141): prior + OOV cost and the
@@ -1863,19 +1810,11 @@ object TextAnalysis {
         lit(null).cast("boolean").as("correct")).filter(lit(false))
     require(classes.size >= 2, s"NB needs >= 2 classes, got ${classes.size}")
     val toks = split(col("text"), " ")
-    // per-class channel fold: the codegen'd binary-search kernel when
-    // registered (q118's graft_vocab_sum — BIGINT adds commute, so
-    // prior-first vs prior-last is bit-identical), else the doubly
-    // interpreted aggregate/element_at HOF
-    val native = nativeVocab(df.sparkSession)
+    // per-class channel fold: the codegen'd binary-search kernel
+    // (q118's graft_vocab_sum; BIGINT adds commute, so the prior is
+    // added after the fold)
     val scored = classes.map { c =>
-      val b = if (native)
-        vocabSumNative(toks, c.bits, c.oovBits) + lit(c.priorBits)
-      else {
-        val m = typedLit(c.bits)
-        aggregate(toks, lit(c.priorBits),
-          (acc, t) => acc + coalesce(element_at(m, t), lit(c.oovBits)))
-      }
+      val b = vocabSumNative(toks, c.bits, c.oovBits) + lit(c.priorBits)
       struct(b.as("bits"), lit(c.source).as("cls"))
     }
     val arr = array_sort(array(scored: _*))
@@ -1962,73 +1901,29 @@ object TextAnalysis {
     * model (token → probability-mass map literal): ½[Σ_{t∈doc}|p_t−q_t|
     * + (1 − Σ_{t∈doc}q_t)] — the second term folds in every reference
     * token the doc lacks, so only the doc's own tokens are walked.
-    * Stateless per-row HOF arithmetic in the scan stage (the model
+    * Stateless per-row arithmetic in the scan stage (the model
     * rides as a literal), so it streams verbatim — q135 measures the
     * corpus-level TVD (which needs token-grain state and cannot stream
     * in one aggregate); this is its per-doc intake form, shared by
     * `StatefulOps.driftMonitor` and its spec's batch recompute.
     */
-  def docTvd(s: SparkSession, text: Column, ref: Map[String, Double]): Column =
-    if (s.catalog.functionExists("graft_tvd_parts")) {
-      // one codegen'd O(n + d·log V) pass (TextKernels.tvdParts) — the
-      // HOF below is O(distinct × n) per row AND interpreted. The
-      // kernel reproduces the fold's term order (first-appearance
-      // distinct order) and per-term IEEE tree, so the double sums are
-      // bit-identical (TextKernelSpec pins it)
-      import org.apache.spark.unsafe.types.UTF8String
-      val kv = ref.toSeq.sortWith((a, b) =>
-        UTF8String.fromString(a._1).compareTo(UTF8String.fromString(b._1)) < 0)
-      val p = call_function("graft_tvd_parts", text,
-        typedLit(kv.map(_._1)), typedLit(kv.map(_._2)))
-      when(text.isNull || p.getField("n") === 0, lit(1.0))
-        .otherwise((p.getField("sum_abs") +
-          (lit(1.0) - p.getField("sum_q"))) / 2)
-    } else docTvdHof(text, ref)
-
-  /** The interpreted-HOF form of [[docTvd]] — the extension-less
-    * fallback and the kernel's parity pin.
-    */
-  private[graft] def docTvdHof(text: Column, ref: Map[String, Double]): Column = {
-    val refMap = typedLit(ref)
-    // empty-split artifacts are NOT tokens: "a  b" must score like
-    // "a b", or a whitespace-formatting change alone pages the drift
-    // monitor (the same =!= "" rule every sibling kernel applies)
-    val toks = filter(split(text, " "), t => t =!= "")
-    val n = size(toks).cast("double")
-    val dist = array_distinct(toks)
-    val q = (t: Column) => coalesce(element_at(refMap, t), lit(0.0))
-    val sumAbs = aggregate(dist, lit(0.0), (acc, t) =>
-      acc + abs(size(filter(toks, x => x === t)).cast("double") / n - q(t)))
-    val sumQ = aggregate(dist, lit(0.0), (acc, t) => acc + q(t))
-    // TOTAL by definition: a NULL-text or zero-token doc is maximally
-    // drifted (1.0), never NULL — a feed that starts shipping empty
-    // payloads must make the monitor louder, not quieter (NULL tvd
-    // would fall out of avg() and the > tau count both)
-    when(text.isNull || n === 0.0, lit(1.0))
-      .otherwise((sumAbs + (lit(1.0) - sumQ)) / 2)
+  def docTvd(text: Column, ref: Map[String, Double]): Column = {
+    // one codegen'd O(n + d·log V) pass (TextKernels.tvdParts). The
+    // kernel reproduces the interpreted fold's term order
+    // (first-appearance distinct order) and per-term IEEE tree, so the
+    // double sums are bit-identical (TextKernelSpec pins it). TOTAL by
+    // definition: a NULL-text or zero-token doc is maximally drifted
+    // (1.0), never NULL — a feed that starts shipping empty payloads
+    // must make the monitor louder, not quieter
+    import org.apache.spark.unsafe.types.UTF8String
+    val kv = ref.toSeq.sortWith((a, b) =>
+      UTF8String.fromString(a._1).compareTo(UTF8String.fromString(b._1)) < 0)
+    val p = call_function("graft_tvd_parts", text,
+      typedLit(kv.map(_._1)), typedLit(kv.map(_._2)))
+    when(text.isNull || p.getField("n") === 0, lit(1.0))
+      .otherwise((p.getField("sum_abs") +
+        (lit(1.0) - p.getField("sum_q"))) / 2)
   }
-
-  /** q180's interpreted run-length fold over sort_array(split(text,
-    * ' ')) — the extension-less fallback and the graft_diversity
-    * kernel's parity pin. Emits struct(n, ss, types) over the column
-    * named `text`.
-    */
-  private[graft] def diversityHof: Column = expr(
-    """aggregate(
-      |  sort_array(split(text, ' ')),
-      |  named_struct('prev', CAST(NULL AS STRING), 'run', 0L,
-      |    'n', 0L, 'ss', 0L, 'types', 0L),
-      |  (acc, t) -> named_struct(
-      |    'prev', t,
-      |    'run', CASE WHEN acc.prev IS NOT NULL AND t = acc.prev
-      |      THEN acc.run + 1 ELSE 1L END,
-      |    'n', acc.n + 1,
-      |    'ss', acc.ss + CASE WHEN acc.prev IS NOT NULL AND t = acc.prev
-      |      THEN acc.run * 2 + 1 ELSE 1L END,
-      |    'types', acc.types + CASE WHEN acc.prev IS NOT NULL
-      |      AND t = acc.prev THEN 0L ELSE 1L END),
-      |  acc -> named_struct('n', acc.n, 'ss', acc.ss,
-      |    'types', acc.types))""".stripMargin.replace("\n", " "))
 
   /** Fit the reference model [[docTvd]] consumes: the corpus's
     * top-[[VocabTopV]] token shares (probability mass per token). The
@@ -2054,16 +1949,8 @@ object TextAnalysis {
 
   def surprisalScore(df: DataFrame, vocab: Map[String, Long], oovBits: Long): DataFrame = {
     val toks = split(col("text"), " ")
-    // native: one codegen'd binary-search fold; HOF fallback is doubly
-    // interpreted (aggregate is CodegenFallback, element_at on a map
-    // literal is a linear scan per token)
-    val surp = if (nativeVocab(df.sparkSession))
-      vocabSumNative(toks, vocab, oovBits)
-    else {
-      val surpMap = typedLit(vocab)
-      aggregate(toks, lit(0L),
-        (acc, t) => acc + coalesce(element_at(surpMap, t), lit(oovBits)))
-    }
+    // one codegen'd binary-search fold per row
+    val surp = vocabSumNative(toks, vocab, oovBits)
     df.withColumn("surp_bits", surp)
       .withColumn("n_tok", size(toks).cast("long"))
       .withColumn("bits_per_tok", col("surp_bits").cast("double") / size(toks))
@@ -2462,14 +2349,8 @@ object TextAnalysis {
     */
   def dsirScore(df: DataFrame, delta: Map[String, Long], deltaOov: Long): DataFrame = {
     val toks = split(col("text"), " ")
-    // native kernel fold / interpreted-HOF fallback — see surprisalScore
-    val w = if (nativeVocab(df.sparkSession))
-      vocabSumNative(toks, delta, deltaOov)
-    else {
-      val dm = typedLit(delta)
-      aggregate(toks, lit(0L),
-        (acc, t) => acc + coalesce(element_at(dm, t), lit(deltaOov)))
-    }
+    // one codegen'd binary-search fold per row — see surprisalScore
+    val w = vocabSumNative(toks, delta, deltaOov)
     df.withColumn("n_tok", size(toks).cast("long"))
       .withColumn("w_bits", w)
       .withColumn("w_per_tok", col("w_bits").cast("double") / size(toks))

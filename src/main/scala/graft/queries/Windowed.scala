@@ -328,18 +328,9 @@ object Windowed {
           // user-grain scores persist ONCE: the top-K heap and the flag
           // join both re-ran the corpus lag window before round 16
           .persistTracked
-        val flagged =
-          if (s.catalog.functionExists("graft_topk"))
-            sc.agg(call_function("graft_topk", col("bits_per_trans"),
-                col("user_id"), lit(AnomalyK)).as("top"))
-              .select(explode(col("top.id")).as("user_id"),
-                lit(true).as("is_anomalous"))
-          else {
-            val wg = Window.orderBy(col("bits_per_trans").desc, col("user_id").asc)
-            sc.withColumn("rn", row_number().over(wg))
-              .filter(col("rn") <= AnomalyK)
-              .select(col("user_id"), lit(true).as("is_anomalous"))
-          }
+        val flagged = sc.agg(call_function("graft_topk", col("bits_per_trans"),
+            col("user_id"), lit(AnomalyK)).as("top"))
+          .select(explode(col("top.id")).as("user_id"), lit(true).as("is_anomalous"))
         sc.join(broadcast(flagged), Seq("user_id"), "left")
           .select(col("user_id"), col("n_trans"), col("surp_bits"),
             col("bits_per_trans"),
@@ -1403,31 +1394,19 @@ object Windowed {
           .filter((col("t_us") < col("p_us") ||
             (col("t_us") === col("p_us") && col("t_id") < col("p_id"))) &&
             col("p_us") - col("t_us") <= AttrWindowUs)
-        val kept =
-          if (s.catalog.functionExists("graft_topk")) {
-            val enc = col("t_id") * 4 +
-              when(col("t_ty") === AttrTouch.head, 0L).otherwise(1L)
-            pairs
-              .groupBy(col("p_id"))
-              .agg(call_function("graft_topk", col("t_us").cast("double"),
-                (-enc).as("nid"), lit(AttrTouchCap)).as("top"),
-                first(col("value")).as("value"))
-              .select(col("p_id"), col("value"),
-                size(col("top")).cast("long").as("n_t"),
-                explode(col("top.id")).as("nid"))
-              .select(col("p_id"), col("value"), col("n_t"),
-                when(pmod(-col("nid"), lit(4)) === 0, AttrTouch.head)
-                  .otherwise(AttrTouch(1)).as("t_ty"))
-          } else {
-            import org.apache.spark.sql.expressions.Window
-            val w = Window.partitionBy(col("p_id"))
-              .orderBy(col("t_us").desc, col("t_id").desc)
-            pairs.withColumn("rk", row_number().over(w))
-              .filter(col("rk") <= AttrTouchCap)
-              .withColumn("n_t",
-                count(lit(1)).over(Window.partitionBy(col("p_id"))))
-              .select(col("p_id"), col("value"), col("n_t"), col("t_ty"))
-          }
+        val enc = col("t_id") * 4 +
+          when(col("t_ty") === AttrTouch.head, 0L).otherwise(1L)
+        val kept = pairs
+          .groupBy(col("p_id"))
+          .agg(call_function("graft_topk", col("t_us").cast("double"),
+            (-enc).as("nid"), lit(AttrTouchCap)).as("top"),
+            first(col("value")).as("value"))
+          .select(col("p_id"), col("value"),
+            size(col("top")).cast("long").as("n_t"),
+            explode(col("top.id")).as("nid"))
+          .select(col("p_id"), col("value"), col("n_t"),
+            when(pmod(-col("nid"), lit(4)) === 0, AttrTouch.head)
+              .otherwise(AttrTouch(1)).as("t_ty"))
         val credited = kept
           .groupBy(col("t_ty"))
           .agg(count(lit(1)).as("n_credits"),
@@ -1864,31 +1843,20 @@ object Windowed {
     //      (day, user) count; the per-day top-5 collapses through the
     //      graft_topk bounded heap at DAY grain — never a single-
     //      partition per-day sort (the q171b argument: a day holds
-    //      ~10⁹ users at 100 TB; the heap's state is O(k) per day) —
-    //      with the bit-identical ranking-window fallback; everything
-    //      downstream is day-grain (≤ #days × k rows).
+    //      ~10⁹ users at 100 TB; the heap's state is O(k) per day);
+    //      everything downstream is day-grain (≤ #days × k rows).
     "q240_topk_churn" -> Q(
       (s, d) => {
         import s.implicits._
         val dn = Tables(s, d, "events")
           .select(expr("CAST(ts AS DATE)").as("day"), col("user_id"))
           .groupBy(col("day"), col("user_id")).agg(count(lit(1)).as("n"))
-        val t5 =
-          if (s.catalog.functionExists("graft_topk"))
-            dn.groupBy(col("day"))
-              .agg(call_function("graft_topk", col("n").cast("double"),
-                col("user_id"), lit(ChurnTopK)).as("top"))
-              .select(col("day"), posexplode(col("top")).as(Seq("pos", "t")))
-              .select(col("day"), col("t.id").as("user_id"),
-                (col("pos") + 1).as("rk"))
-          else {
-            import org.apache.spark.sql.expressions.Window
-            val w = Window.partitionBy(col("day"))
-              .orderBy(col("n").desc, col("user_id").asc)
-            dn.withColumn("rk", row_number().over(w))
-              .filter(col("rk") <= ChurnTopK)
-              .select(col("day"), col("user_id"), col("rk"))
-          }
+        val t5 = dn.groupBy(col("day"))
+          .agg(call_function("graft_topk", col("n").cast("double"),
+            col("user_id"), lit(ChurnTopK)).as("top"))
+          .select(col("day"), posexplode(col("top")).as(Seq("pos", "t")))
+          .select(col("day"), col("t.id").as("user_id"),
+            (col("pos") + 1).as("rk"))
         // day×k leaderboard persists ONCE: the a/b day-pair legs and
         // both distinct-day probes re-ran the corpus (day, user) count
         // before round 16 (duplicate-subtree lint finding)
@@ -1953,7 +1921,7 @@ object Windowed {
     * items costs m² pairs (the Σm² co-visitation hazard; a 10⁴-item
     * session alone is 10⁸ pairs). The kept subset is a DETERMINISTIC
     * unbiased sample: the cap smallest md5 coins over (user, day, item),
-    * so reruns and the window fallback agree exactly. 64 never engages
+    * so reruns agree exactly. 64 never engages
     * on the fixture (max session = 10 distinct items at every sf — the
     * oracle needs no cap arm); CovisCapSpec proves engagement on a
     * planted hot session.
@@ -1966,26 +1934,15 @@ object Windowed {
     * across sessions, floor.
     */
   def covisitationFrom(items: DataFrame): DataFrame = {
-    val s = items.sparkSession
     val coin = conv(substring(md5(concat_ws("\u0001", col("user_id"),
       col("day"), col("item"))), 1, 15), 16, 10).cast("long").cast("double")
-    val capped =
-      if (s.catalog.functionExists("graft_topk"))
-        items.groupBy(col("user_id"), col("day"))
-          .agg(call_function("graft_topk", -coin, col("item").cast("long"),
-            lit(CovisItemCap)).as("top"))
-          .select(col("user_id"), col("day"),
-            explode(col("top.id")).as("item_l"))
-          .select(col("user_id"), col("day"),
-            col("item_l").cast("int").as("item"))
-      else {
-        // bit-identical relational fallback (same coin, same tie-break)
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("user_id"), col("day"))
-          .orderBy(coin.asc, col("item").asc)
-        items.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= CovisItemCap).drop("rk")
-      }
+    val capped = items.groupBy(col("user_id"), col("day"))
+      .agg(call_function("graft_topk", -coin, col("item").cast("long"),
+        lit(CovisItemCap)).as("top"))
+      .select(col("user_id"), col("day"),
+        explode(col("top.id")).as("item_l"))
+      .select(col("user_id"), col("day"),
+        col("item_l").cast("int").as("item"))
     // capped per-session item sets persist ONCE: both pair-join legs
     // re-ran the dedup+cap aggregate before round 16 (the "exchange
     // reuse" this function used to assume never materialized — lint)

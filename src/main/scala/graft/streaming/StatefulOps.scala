@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -21,6 +22,15 @@ object StatefulOps {
     */
   private def usOf(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+
+  /** `df` after installing the graft kernels on its session — called on
+    * every operator input whose plan calls a kernel, BEFORE a stream
+    * starts (the stream's cloned session inherits the registry).
+    */
+  private def withKernels[T](df: Dataset[T]): Dataset[T] = {
+    GraftExtensions.install(df.sparkSession)
+    df
+  }
 
   final case class Attempt(key: String, ok: Boolean, ts: java.sql.Timestamp)
   final case class LedgerState(attempts: Int)
@@ -133,9 +143,8 @@ object StatefulOps {
     */
   def qualityMonitor(docs: DataFrame, textCol: String, tsCol: String,
                      keyCol: String, lateness: String, win: String): DataFrame =
-    docs
-      .withColumn("__c", graft.queries.TextAnalysis.concentration(
-        docs.sparkSession, col(textCol)))
+    withKernels(docs)
+      .withColumn("__c", graft.queries.TextAnalysis.concentration(col(textCol)))
       .withWatermark(tsCol, lateness)
       .groupBy(window(col(tsCol), win), col(keyCol))
       .agg(count(lit(1)).as("n_docs"),
@@ -160,8 +169,8 @@ object StatefulOps {
     val gl = g.getField("g_lang")
     val gq = g.getField("g_q")
     val all = gl && gq && g.getField("g_rep")
-    docs
-      .withColumn("__g", graft.queries.Pipeline.gateFlags(docs.sparkSession, col(textCol)))
+    withKernels(docs)
+      .withColumn("__g", graft.queries.Pipeline.gateFlags(col(textCol)))
       .withWatermark(tsCol, lateness)
       .groupBy(window(col(tsCol), win), col(keyCol))
       .agg(count(lit(1)).as("n_docs"),
@@ -190,9 +199,8 @@ object StatefulOps {
   def driftMonitor(docs: DataFrame, textCol: String, tsCol: String,
                    keyCol: String, lateness: String, win: String,
                    ref: Map[String, Double], tau: Double): DataFrame =
-    docs
-      .withColumn("__tvd",
-        graft.queries.TextAnalysis.docTvd(docs.sparkSession, col(textCol), ref))
+    withKernels(docs)
+      .withColumn("__tvd", graft.queries.TextAnalysis.docTvd(col(textCol), ref))
       .withWatermark(tsCol, lateness)
       .groupBy(window(col(tsCol), win), col(keyCol))
       .agg(count(lit(1)).as("n_docs"),
@@ -213,15 +221,11 @@ object StatefulOps {
     * token counts, so it is order-free), so they dedup even though an
     * exact-text dropDuplicates would pass them through.
     */
-  def simhashDedup(docs: DataFrame, textCol: String, tsCol: String, delay: String): DataFrame = {
-    require(docs.sparkSession.catalog.functionExists("graft_simhash"),
-      "simhashDedup needs the graft_simhash kernel: build the session " +
-        "with .withExtensions(new graft.plans.GraftExtensions)")
-    docs
+  def simhashDedup(docs: DataFrame, textCol: String, tsCol: String, delay: String): DataFrame =
+    withKernels(docs)
       .withColumn("simhash", call_function("graft_simhash", col(textCol)))
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("simhash")
-  }
 
   /** [[simhashDedup]]'s embedding-space sibling: near-dup suppression by
     * SRP-sketch equality. Each vector gets a `bits`-wide
@@ -275,9 +279,7 @@ object StatefulOps {
                          cap: Int = 200): Dataset[NearDupPair] = {
     val s = docs.sparkSession
     import s.implicits._
-    require(s.catalog.functionExists("graft_minhash"),
-      "minhashPairsStream needs the graft_shingles3/graft_minhash kernels: build " +
-        "the session with .withExtensions(new graft.plans.GraftExtensions)")
+    GraftExtensions.install(s)
     val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(delay))
     val ttlMs = iv.months * 2592000000L + iv.days * 86400000L + iv.microseconds / 1000L
@@ -333,10 +335,7 @@ object StatefulOps {
   def srpDedup(docs: DataFrame, vecCol: String, tsCol: String, delay: String,
                bits: Int = 64): DataFrame = {
     require(bits >= 1 && bits <= 64, s"srpDedup packs the sketch into one BIGINT, got $bits bits")
-    require(docs.sparkSession.catalog.functionExists("graft_srpsig"),
-      "srpDedup needs the graft_srpsig kernel: build the session " +
-        "with .withExtensions(new graft.plans.GraftExtensions)")
-    docs
+    withKernels(docs)
       .withColumn("srp_key", expr(
         s"""aggregate(zip_with(
            |  graft_srpsig(transform($vecCol, x -> CAST(x AS DOUBLE)), $bits),
@@ -370,11 +369,11 @@ object StatefulOps {
   def annAssign(vectors: DataFrame, cents: () => DataFrame,
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
+    withKernels(vectors).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.Similarity.assignToCentroids(
-          batch.sparkSession, batch, cents()), id); ()
+          batch, cents()), id); ()
       }
       .start()
 
@@ -389,11 +388,11 @@ object StatefulOps {
   def annSearch(queries: DataFrame, corpus: () => DataFrame, k: Int,
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
+    withKernels(queries).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.Similarity.searchTopK(
-          batch.sparkSession, corpus(), batch, k), id); ()
+          corpus(), batch, k), id); ()
       }
       .start()
 
@@ -411,10 +410,10 @@ object StatefulOps {
   def fuzzyGate(incoming: DataFrame, idx: () => DataFrame,
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
+    withKernels(incoming).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(graft.queries.Dedup.fuzzyProbe(batch.sparkSession, batch, idx()), id); ()
+        sink(graft.queries.Dedup.fuzzyProbe(batch, idx()), id); ()
       }
       .start()
 
@@ -438,7 +437,7 @@ object StatefulOps {
       idx: () => graft.queries.TextAnalysis.Bm25Index,
       k: Int, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
+    withKernels(queries).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.TextAnalysis.bm25Probe(batch, idx(), k), id); ()
@@ -458,7 +457,7 @@ object StatefulOps {
       idx: () => graft.queries.TextAnalysis.Bm25Index,
       corpus: () => DataFrame, k: Int, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
+    withKernels(queries).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.TextAnalysis.hybridProbe(batch, idx(), corpus(), k), id); ()
@@ -479,7 +478,7 @@ object StatefulOps {
   def spanGate(incoming: DataFrame, idx: () => DataFrame,
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
+    withKernels(incoming).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.Pipeline.spanProbe(batch, idx()), id); ()
@@ -796,7 +795,7 @@ object StatefulOps {
       classes: () => Seq[graft.queries.TextAnalysis.NbClass],
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
+    withKernels(incoming).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.TextAnalysis.nbScore(batch, classes()), id); ()
@@ -1130,10 +1129,7 @@ object StatefulOps {
     */
   def topkMonitor(docs: DataFrame, textCol: String, tsCol: String,
                   lateness: String, win: String, capacity: Int): DataFrame = {
-    require(docs.sparkSession.catalog.functionExists("graft_mg_candidates"),
-      "topkMonitor needs the graft_mg_candidates native aggregate — " +
-        "register graft.plans.GraftExtensions")
-    docs
+    withKernels(docs)
       .select(col(tsCol), explode(split(col(textCol), " ")).as("__tok"))
       .withWatermark(tsCol, lateness)
       .groupBy(window(col(tsCol), win))
@@ -1156,10 +1152,7 @@ object StatefulOps {
   def topkMonitorGrouped(docs: DataFrame, textCol: String, tsCol: String,
                          keyCol: String, lateness: String, win: String,
                          capacity: Int): DataFrame = {
-    require(docs.sparkSession.catalog.functionExists("graft_mg_candidates"),
-      "topkMonitorGrouped needs the graft_mg_candidates native aggregate — " +
-        "register graft.plans.GraftExtensions")
-    docs
+    withKernels(docs)
       .select(col(tsCol), col(keyCol),
         explode(split(col(textCol), " ")).as("__tok"))
       .withWatermark(tsCol, lateness)
@@ -1317,7 +1310,7 @@ object StatefulOps {
   def surprisalGate(incoming: DataFrame, fit: () => (Map[String, Long], Long),
       maxBits: Double, checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
+    withKernels(incoming).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val (vocab, oovBits) = fit()
@@ -1333,7 +1326,7 @@ object StatefulOps {
     * ([[graft.queries.Pipeline.boilerplateFit]] — the df aggregate runs
     * on the batch cadence; the artifact is a bounded line-hash list).
     * The scrub itself ([[graft.queries.Pipeline.scrubLines]]) is one
-    * stateless per-row HOF projection — the surprisalGate shape — so
+    * stateless per-row projection — the surprisalGate shape — so
     * the stream pays zero shuffles and holds zero state; exactly-once
     * per batch comes from foreachBatch + the checkpoint, pinned like
     * fuzzyGate's.
@@ -1350,7 +1343,7 @@ object StatefulOps {
   def boilerplateGate(incoming: DataFrame, textCol: String,
       boiler: () => Seq[Long], checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
+    withKernels(incoming).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.Pipeline.scrubLines(batch, textCol, boiler()), id)
@@ -1379,7 +1372,7 @@ object StatefulOps {
   def budgetGate(incoming: DataFrame, fit: () => Map[String, Long],
       checkpointDir: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
+    withKernels(incoming).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.queries.Pipeline.budgetProbe(batch, fit()), id)

@@ -35,14 +35,14 @@ class AnnRecallSpec extends SparkSuite {
       .select(col("vec_id"), graft.functions.VectorFns.toDouble(col("embedding")).as("v"))
     val native = e.select(col("vec_id"),
       call_function("graft_srpsig", col("v"), lit(queries.Similarity.SigBits)).as("sg"))
-    val hof = e.select(col("vec_id"), queries.Similarity.srpSigHof("v").as("sg"))
+    val hof = e.select(col("vec_id"), HofRefs.srpSigHof("v").as("sg"))
     assert(native.except(hof).isEmpty && hof.except(native).isEmpty,
       "graft_srpsig diverges from the interpreted-HOF signature")
     val pairs = native.limit(20).toDF("id_a", "a")
       .crossJoin(native.limit(20).toDF("id_b", "b"))
     val diff = pairs.select(
         call_function("graft_hamming", col("a"), col("b")).as("nh"),
-        queries.Similarity.hammingHof("a", "b").as("hh"))
+        HofRefs.hammingHof("a", "b").as("hh"))
       .filter(col("nh") =!= col("hh"))
     assert(diff.isEmpty, "graft_hamming diverges from the zip_with fold")
   }
@@ -57,8 +57,8 @@ class AnnRecallSpec extends SparkSuite {
       .select(col("vec_id"),
         graft.functions.VectorFns.toDouble(col("embedding")).as("v"))
     val cents = queries.Similarity.trainCentroids(spark, sf())
-    val ivf = queries.Similarity.ivfSearchTopK(spark,
-        queries.Similarity.assignToCentroids(spark, e, cents),
+    val ivf = queries.Similarity.ivfSearchTopK(
+        queries.Similarity.assignToCentroids(e, cents),
         e.filter(col("vec_id") < queries.TextAnalysis.Bm25Queries)
           .select(col("vec_id").as("q_id"), col("v").as("qv")),
         cents, queries.Similarity.HybridProbes, queries.TextAnalysis.Bm25TopK)
@@ -76,7 +76,7 @@ class AnnRecallSpec extends SparkSuite {
     val e = Tables(spark, sf(), "embeddings")
       .select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("v"))
     // brute n² ground truth: every vector as query (cheap at sf0.001)
-    val bruteTruth = queries.Similarity.searchTopK(spark, e,
+    val bruteTruth = queries.Similarity.searchTopK(e,
         e.select(col("vec_id").as("q_id"), col("v").as("qv")),
         queries.Similarity.KnnK)
       .select(col("q_id"), col("n_id"))

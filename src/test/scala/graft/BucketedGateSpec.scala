@@ -88,7 +88,7 @@ class BucketedGateSpec extends SparkSuite {
   test("q106 fuzzy gate against a bucketed band index: corpus side has no exchange and no sort") {
     val docs = Tables(spark, sf(), "documents")
     val corpus = docs.filter(col("doc_id") % 10 < 8)
-    val idxInline = queries.Dedup.bandIndex(spark, corpus, queries.Dedup.BucketCap)
+    val idxInline = queries.Dedup.bandIndex(corpus, queries.Dedup.BucketCap)
     val dir = tmpDir("bucketed_bands")
     try {
       sinks.CorpusSink.writeBucketed(
@@ -96,9 +96,9 @@ class BucketedGateSpec extends SparkSuite {
       withoutAqe {
         val batch = docs.filter(col("doc_id") % 10 >= 8)
         val gate = queries.Dedup.fuzzyProbe(
-          spark, batch, spark.table("bg_bands").hint("merge"))
+          batch, spark.table("bg_bands").hint("merge"))
         assertCorpusSideExchangeFree(smjOn(gate, "band"))
-        val inline = queries.Dedup.fuzzyProbe(spark, batch, idxInline)
+        val inline = queries.Dedup.fuzzyProbe(batch, idxInline)
         assert(gate.collect().map(_.toSeq).toSet ==
           inline.collect().map(_.toSeq).toSet)
         assert(gate.count() > 0)

@@ -846,7 +846,7 @@ class CheckpointRestartSpec extends SparkSuite {
     val schema = StructType.fromDDL("doc_id BIGINT, text STRING")
     val corpusText = "t1 t2 t3 t4 t5 t6 t7 t8"
     import spark.implicits._
-    val idx = queries.Dedup.bandIndex(spark,
+    val idx = queries.Dedup.bandIndex(
       Seq((1L, corpusText)).toDF("doc_id", "text"), queries.Dedup.BucketCap)
     def writeDocs(name: String, rows: Seq[(Long, String)]): Unit = {
       val body = rows.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }

@@ -34,7 +34,7 @@ class ClosureDiameterSpec extends SparkSuite {
   private def chainPairs(dd: Int) = {
     import spark.implicits._
     val corpus = chainVectors(dd).toDF("vec_id", "v")
-    val edges = queries.Similarity.searchTopK(spark, corpus,
+    val edges = queries.Similarity.searchTopK(corpus,
       corpus.select(col("vec_id").as("q_id"), col("v").as("qv")), 4)
     edges.filter(col("cos") >= queries.Similarity.SemDedupTau &&
         col("q_id") =!= col("n_id"))

@@ -112,11 +112,9 @@ class CollectCappedSpec extends SparkSuite {
   }
 
   test("dedup results unchanged vs the compositional fallback on the fixture") {
-    // minhashPairs flips to the fallback when the native fn is absent;
-    // simulate by comparing against an explicitly-composed run at the
-    // same cap through the public builder on a session WITH extensions:
     // the DedupCapSpec cliques cover engaged-cap equality; here the
-    // production cap (disengaged at fixture scale) must equal collect_list
+    // production cap (disengaged at fixture scale) must equal an
+    // uncapped run through the same public builder
     val viaAgg = Dedup.minhashPairs(spark, sf(), Dedup.BucketCap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val uncapped = Dedup.minhashPairs(spark, sf(), Int.MaxValue - 1)

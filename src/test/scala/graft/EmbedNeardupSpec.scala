@@ -15,7 +15,7 @@ class EmbedNeardupSpec extends SparkSuite {
     val a = e.select(col("vec_id").as("id_a"), col("v").as("va"))
     val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cos", VectorFns.cosine(spark, col("va"), col("vb")))
+      .withColumn("cos", VectorFns.cosine(col("va"), col("vb")))
       .filter(col("cos") >= 0.45)
       .select(col("id_a"), col("id_b"))
   }

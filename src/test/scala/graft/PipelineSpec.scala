@@ -442,7 +442,7 @@ class PipelineSpec extends SparkSuite {
         .filter(col("selected"))
         .join(Tables(spark, sf(), "documents")
           .select(col("doc_id"),
-            queries.Pipeline.qualityFp(spark, col("text")).as("q_fp")),
+            queries.Pipeline.qualityFp(col("text")).as("q_fp")),
           Seq("doc_id"))
         .groupBy(col("source")).agg(min(col("q_fp")).as("cut"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -415,7 +415,7 @@ object ScaleProbe {
         }
         val corpus = spark.createDataFrame(rows).toDF("vec_id", "v")
           .repartition(32)
-        val edges = queries.Similarity.searchTopK(spark, corpus,
+        val edges = queries.Similarity.searchTopK(corpus,
           corpus.select(col("vec_id").as("q_id"), col("v").as("qv")), 4)
         val pairs = edges.filter(col("cos") >= queries.Similarity.SemDedupTau &&
             col("q_id") =!= col("n_id"))
@@ -460,7 +460,7 @@ object ScaleProbe {
           corpusK.select(sha2(col("text"), 256).as("h")).distinct(),
           s"bg_digests_$k", s"/tmp/bucketgate_${k}_digests", Seq("h"), 32)
         sinks.CorpusSink.writeBucketed(
-          queries.Dedup.bandIndex(spark, corpusK, queries.Dedup.BucketCap),
+          queries.Dedup.bandIndex(corpusK, queries.Dedup.BucketCap),
           s"bg_bands_$k", s"/tmp/bucketgate_${k}_bands", Seq("band", "bsig"), 32)
         // merge hint: at probe scale the planner would broadcast the
         // index and hide the bucketed-SMJ path that matters at 100 TB
@@ -468,7 +468,7 @@ object ScaleProbe {
           queries.Pipeline.exactDedupGate(batch,
             spark.table(s"bg_digests_$k").hint("merge")).count())
         time(f"q106 fuzzy gate   corpus=${k}%2dx")(
-          queries.Dedup.fuzzyProbe(spark, batch,
+          queries.Dedup.fuzzyProbe(batch,
             spark.table(s"bg_bands_$k").hint("merge")).count())
       }
       ks.foreach { k =>

@@ -243,7 +243,7 @@ class StatefulOpsSpec extends SparkSuite {
       // stream ≡ batch: same kernel over the same rows gives the same means
       val expected = batch.toDF("ts", "source", "text")
         .groupBy(col("source"))
-        .agg(avg(TextAnalysis.docTvd(spark, col("text"), ref)).as("m"))
+        .agg(avg(TextAnalysis.docTvd(col("text"), ref)).as("m"))
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(rows("srcA")._4 == expected("srcA") && rows("srcB")._4 == expected("srcB"),
         s"stream diverges from batch: $rows vs $expected")
@@ -390,7 +390,7 @@ class StatefulOpsSpec extends SparkSuite {
     import spark.implicits._
     val t = (1 to 44).map(i => s"t$i")
     val corpusText = t.slice(0, 40).mkString(" ")
-    val idx = graft.queries.Dedup.bandIndex(spark,
+    val idx = graft.queries.Dedup.bandIndex(
       Seq(1L -> corpusText).toDF("doc_id", "text"), graft.queries.Dedup.BucketCap)
     val in = MemoryStream[(Long, String, Timestamp)]
     val stream = in.toDF().toDF("doc_id", "text", "ts")
@@ -426,7 +426,7 @@ class StatefulOpsSpec extends SparkSuite {
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
     val queries = corpus.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val expected = graft.queries.Similarity.searchTopK(spark, corpus, queries, 5)
+    val expected = graft.queries.Similarity.searchTopK(corpus, queries, 5)
       .select("q_id", "n_id", "rk").as[(Long, Long, Int)].collect().toSet
     val in = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Int)]
@@ -454,7 +454,7 @@ class StatefulOpsSpec extends SparkSuite {
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
       .filter(col("vec_id") < 20)
     val expected = graft.queries.Similarity
-      .assignToCentroids(spark, batch, cents)
+      .assignToCentroids(batch, cents)
       .select("vec_id", "c_id").as[(Long, Long)].collect().toMap
     val in = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.concurrent.TrieMap.empty[Long, Long]
@@ -479,7 +479,7 @@ class StatefulOpsSpec extends SparkSuite {
     import spark.implicits._
     val t = (1 to 44).map(i => s"t$i")
     val corpusText = t.slice(0, 40).mkString(" ")
-    val idx = graft.queries.Dedup.bandIndex(spark,
+    val idx = graft.queries.Dedup.bandIndex(
       Seq(1L -> corpusText, 2L -> (1 to 30).map(i => s"z$i").mkString(" "))
         .toDF("doc_id", "text"),
       graft.queries.Dedup.BucketCap)
@@ -518,7 +518,7 @@ class StatefulOpsSpec extends SparkSuite {
     val corpusA = (1 to 40).map(i => s"a$i").mkString(" ")
     val corpusB = (1 to 40).map(i => s"b$i").mkString(" ")
     def indexOf(rows: Seq[(Long, String)]) = graft.queries.Dedup.bandIndex(
-      spark, rows.toDF("doc_id", "text"), graft.queries.Dedup.BucketCap)
+      rows.toDF("doc_id", "text"), graft.queries.Dedup.BucketCap)
     val idxOld = indexOf(Seq(1L -> corpusA))
     val idxNew = indexOf(Seq(1L -> corpusA, 2L -> corpusB))
     @volatile var idx = idxOld
@@ -1392,7 +1392,7 @@ class StatefulOpsSpec extends SparkSuite {
     // quality), never a clear miss
     val docs = Tables(spark, d, "documents")
       .select(col("doc_id"), col("source"), col("text"),
-        queries.Pipeline.qualityFp(spark, col("text")).as("q_fp"))
+        queries.Pipeline.qualityFp(col("text")).as("q_fp"))
     val sel = queries.Catalog.all("q248_token_budget_select").build(spark, d)
       .select(col("doc_id"), col("selected"))
     val joined = docs.join(sel, Seq("doc_id")).collect()

@@ -586,7 +586,7 @@ class TextKernelSpec extends SparkSuite {
     val nat = structArrs.select(call_function("graft_pairs", col("ids")).as("p"))
       .collect().map(_.getSeq[org.apache.spark.sql.Row](0).map(_.toString))
     val hof = structArrs.select(
-        graft.queries.Dedup.sortedPairsHof(col("ids")).as("p"))
+        HofRefs.sortedPairsHof(col("ids")).as("p"))
       .collect().map(_.getSeq[org.apache.spark.sql.Row](0).map(_.toString))
     assert(nat.toSeq == hof.toSeq)
     assert(nat.head.length == 6) // k=4 → 6 pairs, row-major
@@ -595,7 +595,7 @@ class TextKernelSpec extends SparkSuite {
     val natL = longArrs.select(call_function("graft_pairs", col("ids")).as("p"))
       .collect().map(_.getSeq[org.apache.spark.sql.Row](0).map(_.toString))
     val hofL = longArrs.select(
-        graft.queries.Dedup.sortedPairsHof(col("ids")).as("p"))
+        HofRefs.sortedPairsHof(col("ids")).as("p"))
       .collect().map(_.getSeq[org.apache.spark.sql.Row](0).map(_.toString))
     assert(natL.toSeq == hofL.toSeq)
     // pair ORDER is part of the contract (downstream first()/collect
@@ -623,10 +623,10 @@ class TextKernelSpec extends SparkSuite {
     assert(native.toSeq == hof.toSeq)
     // spot-check the semantics: "" splits to one "" token → one oov
     assert(native(2).contains(oov))
-    // markerCount's kernel path ≡ its filter/OR-chain fallback
+    // markerCount's kernel fold ≡ the interpreted filter/OR-chain form
     val words = Seq("the", "a")
     val nm = docs.select(graft.queries.TextAnalysis
-        .markerCount(spark, toks, words).as("c")).collect()
+        .markerCount(toks, words).as("c")).collect()
       .map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
     val hm = docs.select(size(filter(toks,
         t => words.map(t === _).reduce(_ || _))).as("c")).collect()
@@ -653,15 +653,15 @@ class TextKernelSpec extends SparkSuite {
       .union(spark.sql("SELECT CAST(NULL AS STRING) AS text"))
     val docs = Tables(spark, sf(), "documents").select("text").union(edge)
     val diff = docs.select(
-        graft.queries.TextAnalysis.concentration(spark, col("text")).as("nat"),
-        graft.queries.TextAnalysis.concentrationHof(col("text")).as("hof"))
+        graft.queries.TextAnalysis.concentration(col("text")).as("nat"),
+        HofRefs.concentrationHof(col("text")).as("hof"))
       .filter(!(col("nat") <=> col("hof")))
     assert(diff.count() == 0)
     // spot-pin the semantics the q109 oracle encodes: "w w w w w w" has
     // top1 = 1.0 (all instances one token) and top2 = 1.0 (all bigrams
     // "w w"), and is flagged
     val r = Seq("w w w w w w").toDF("text").select(
-      graft.queries.TextAnalysis.concentration(spark, col("text")).as("c"))
+      graft.queries.TextAnalysis.concentration(col("text")).as("c"))
       .select(col("c.n_tokens"), col("c.top1_frac"), col("c.top2_frac"),
         col("c.keep")).head
     assert(r.getInt(0) == 6 && r.getDouble(1) == 1.0 &&
@@ -680,15 +680,15 @@ class TextKernelSpec extends SparkSuite {
       .union(spark.sql("SELECT CAST(NULL AS STRING) AS text"))
     val docs = Tables(spark, sf(), "documents").select("text").union(edge)
     val diff = docs.select(
-        graft.queries.Pipeline.repetitionProfile(spark, col("text")).as("nat"),
-        graft.queries.Pipeline.repetitionProfileHof(col("text")).as("hof"))
+        graft.queries.Pipeline.repetitionProfile(col("text")).as("nat"),
+        HofRefs.repetitionProfileHof(col("text")).as("hof"))
       .filter(!(col("nat") <=> col("hof")))
     assert(diff.count() == 0)
     // spot-pin q96's oracle semantics: "w w w w w w" is one unique
     // token (uniq 1/6), all bigrams "w w" (dup2 = 1 - 1/5), all
     // trigrams "w w w" (dup3 = 1 - 1/4)
     val r = Seq("w w w w w w").toDF("text").select(
-      graft.queries.Pipeline.repetitionProfile(spark, col("text")).as("c"))
+      graft.queries.Pipeline.repetitionProfile(col("text")).as("c"))
       .select(col("c.n_tok"), col("c.uniq_frac"), col("c.dup2_frac"),
         col("c.dup3_frac")).head
     assert(r.getInt(0) == 6 && r.getDouble(1) == 1.0 / 6.0 &&
@@ -724,7 +724,7 @@ class TextKernelSpec extends SparkSuite {
     val docs = Tables(spark, sf(), "documents").select("text").union(edge)
     val diff = docs.select(
         call_function("graft_diversity", col("text")).as("nat"),
-        graft.queries.TextAnalysis.diversityHof.as("hof"))
+        HofRefs.diversityHof.as("hof"))
       .filter(!(col("nat") <=> col("hof")))
     assert(diff.count() == 0)
     // spot-pin q180's oracle semantics: "w w w w w w" is 6 tokens of
@@ -752,8 +752,8 @@ class TextKernelSpec extends SparkSuite {
     // exact-equality filter (not tolerance): the kernel reproduces the
     // fold's term order and IEEE tree, so the doubles are bit-identical
     val diff = docs.select(
-        graft.queries.TextAnalysis.docTvd(spark, col("text"), ref).as("nat"),
-        graft.queries.TextAnalysis.docTvdHof(col("text"), ref).as("hof"))
+        graft.queries.TextAnalysis.docTvd(col("text"), ref).as("nat"),
+        HofRefs.docTvdHof(col("text"), ref).as("hof"))
       .filter(!(col("nat") <=> col("hof")))
     assert(diff.count() == 0)
     // misordered keys literal rejected at plan build, not mis-searched
@@ -778,8 +778,8 @@ class TextKernelSpec extends SparkSuite {
       .union(spark.sql("SELECT CAST(-1 AS BIGINT), 'none', CAST(NULL AS STRING)"))
     val native = TextAnalysis.nbScore(docs, probed)
       .collect().map(r => r.toSeq).toSet
-    // the HOF recomputation, inlined (nbScore dispatches on the native
-    // function's presence, so the fallback is reproduced here)
+    // the HOF recomputation, inlined (nbScore always runs the kernel,
+    // so the reference is written out here)
     val toks = split(col("text"), " ")
     val scored = probed.map { c =>
       val m = typedLit(c.bits)
@@ -814,7 +814,7 @@ class TextKernelSpec extends SparkSuite {
     val inline = least(lit(1.0), nTok / lit(100.0)) *
       (lit(1.0) - nStop.cast("double") / nTok)
     val diff = docs.select(
-        graft.queries.Pipeline.docQuality(spark, col("text")).as("nat"),
+        graft.queries.Pipeline.docQuality(col("text")).as("nat"),
         inline.as("hof"))
       .filter(!(col("nat") <=> col("hof")))
     assert(diff.count() == 0)
@@ -859,8 +859,8 @@ class TextKernelSpec extends SparkSuite {
       .select(col("doc_id"), col("text")).limit(200)
     val native = graft.queries.Pipeline.spanWindowsPos(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    // the HOF formulation, inlined (spanWindowsPos dispatches on the
-    // native function's presence, so the fallback is reproduced here)
+    // the HOF formulation, inlined (spanWindowsPos always runs the
+    // kernel, so the reference is written out here)
     import graft.queries.Pipeline.{SpanAnchorMod, SpanTokens}
     val toks = split(col("text"), " ")
     def anchorHash(c: org.apache.spark.sql.Column) =

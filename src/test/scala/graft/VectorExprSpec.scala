@@ -16,16 +16,15 @@ class VectorExprSpec extends SparkSuite {
       .join(e.select(col("vec_id").as("idb"), col("v").as("vb")),
         col("ida") === col("idb") - 1)
     val diff = pairs.select(
-        VectorFns.dot(spark, col("va"), col("vb")).as("d_native"),
-        VectorFns.dotHof(col("va"), col("vb")).as("d_hof"),
-        VectorFns.cosine(spark, col("va"), col("vb")).as("c_native"),
-        VectorFns.cosineHof(col("va"), col("vb")).as("c_hof"))
+        VectorFns.dot(col("va"), col("vb")).as("d_native"),
+        HofRefs.dotHof(col("va"), col("vb")).as("d_hof"),
+        VectorFns.cosine(col("va"), col("vb")).as("c_native"),
+        HofRefs.cosineHof(col("va"), col("vb")).as("c_hof"))
       .filter(col("d_native") =!= col("d_hof") || col("c_native") =!= col("c_hof"))
     assert(diff.count() == 0)
   }
 
   test("native expressions are registered and usable from SQL") {
-    assert(VectorFns.nativeAvailable(spark))
     val r = spark.sql(
       "SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c," +
         " graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
@@ -42,16 +41,16 @@ class VectorExprSpec extends SparkSuite {
         col("ida") === col("idb") - 1)
     // written with the portable HOF forms — no call_function anywhere
     val df = pairs.select(
-      VectorFns.cosineHof(col("va"), col("vb")).as("c"),
-      VectorFns.dotHof(col("va"), col("vb")).as("d"))
+      HofRefs.cosineHof(col("va"), col("vb")).as("c"),
+      HofRefs.dotHof(col("va"), col("vb")).as("d"))
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(optimized.contains("graft_cosine"), optimized)
     assert(optimized.contains("graft_dot"), optimized)
     assert(!optimized.contains("aggregate("), optimized)
     // and the rewritten plan still computes the same values
     val viaNative = pairs.select(
-      VectorFns.cosine(spark, col("va"), col("vb")).as("c"),
-      VectorFns.dot(spark, col("va"), col("vb")).as("d"))
+      VectorFns.cosine(col("va"), col("vb")).as("c"),
+      VectorFns.dot(col("va"), col("vb")).as("d"))
     assert(df.collect().map(_.toSeq).toSeq == viaNative.collect().map(_.toSeq).toSeq)
   }
 
@@ -71,8 +70,8 @@ class VectorExprSpec extends SparkSuite {
       (Seq[Option[Double]](Some(1.0), Some(2.0)), Seq[Option[Double]](Some(2.0), Some(3.0))))
       .toDF("a", "b")
     val rows = df.select(
-        VectorFns.dotHof(col("a"), col("b")).as("d_hof"),
-        VectorFns.cosineHof(col("a"), col("b")).as("c_hof"),
+        HofRefs.dotHof(col("a"), col("b")).as("d_hof"),
+        HofRefs.cosineHof(col("a"), col("b")).as("c_hof"),
         call_function("graft_dot", col("a"), col("b")).as("d_native"),
         call_function("graft_cosine", col("a"), col("b")).as("c_native"))
       .collect()
@@ -85,7 +84,7 @@ class VectorExprSpec extends SparkSuite {
     // and the auto-rewrite of the HOF shape over nullable-element arrays
     // stays value-identical (it may rewrite — the kernel now reproduces
     // the NULL result)
-    val viaRewrite = df.select(VectorFns.dotHof(col("a"), col("b")).as("d")).collect()
+    val viaRewrite = df.select(HofRefs.dotHof(col("a"), col("b")).as("d")).collect()
     assert(viaRewrite(0).isNullAt(0))
     assert(viaRewrite(1).getDouble(0) == clean.getDouble(0))
   }
