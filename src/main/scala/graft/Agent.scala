@@ -139,14 +139,7 @@ object Agent {
           sys.exit(3) // reference exit 3/6: bad broker / bad sink settings
       }
 
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", s"local[${cfg.workerCount}]"))
-      .appName("graft-agent")
-      .config("spark.sql.shuffle.partitions", cfg.workerCount.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cfg.workerCount, cfg.workerCount)
 
     val running =
       try start(spark, cfg)

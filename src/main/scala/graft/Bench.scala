@@ -221,25 +221,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // ObjectHashAggregateExec (every collectCapped/TypedImperative
-      // posting-list build: q41/q43/q44/q45) falls back to SORT-based
-      // aggregation after only 128 distinct keys per task (Spark
-      // default) — i.e. the whole exploded shingle stream gets sorted
-      // twice. 128k keys/task × small capped buffers is ~tens of MB:
-      // keep the hash regime at our scale, keep the fallback as the
-      // OOM backstop beyond it.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(cpus.toInt, cpus.toInt)
 
     // quiet-start bar (round-15 verdict prescription: cpus/4) and the
     // per-sample contended-witness bar in external-core units (same

@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.IntegerType
   * expressions so they are callable from both the Column API
   * (`call_function`) and SQL, plus the [[RewriteVectorHofs]] optimizer
   * rule. The kernels are mandatory — every operator has exactly one
-  * (kernel) code path. Wire up with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`,
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`, or
-  * [[GraftExtensions.install]] on an already-built session.
+  * (kernel) code path. [[graft.Sessions.local]] puts them on every repo
+  * session with [[GraftExtensions.install]]; this class serves
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` and
+  * `.withExtensions` users.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

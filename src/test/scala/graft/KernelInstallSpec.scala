@@ -10,28 +10,31 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 /** The graft kernels are mandatory and every operator has one code path:
   * [[GraftExtensions.install]] makes a session built WITHOUT the
   * extension run the same kernels, and no dispatch on function presence
-  * or interpreted `*Hof` fallback may reappear in main.
+  * or interpreted `*Hof` fallback may reappear in main. The suite session
+  * comes from [[Sessions.local]], which installs; the extension class is
+  * exercised on purpose here, on a fresh session of its own.
   */
 class KernelInstallSpec extends SparkSuite {
 
-  /** A fresh session on the shared SparkContext with no extension, built
-    * by hiding the suite's session from the builder and restoring it
-    * afterwards.
+  /** A fresh session on the shared SparkContext — plain, or with the
+    * extension — built by hiding the suite's session from the builder and
+    * restoring it afterwards.
     */
-  private def withPlainSession[T](body: SparkSession => T): T = {
-    val ext = spark
+  private def withFreshSession[T](extension: Boolean)(body: SparkSession => T): T = {
+    val suite = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val plain = SparkSession.builder()
+      val builder = SparkSession.builder()
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      assert(plain ne ext, "builder returned the extension session")
-      body(plain)
+      if (extension) builder.withExtensions(new GraftExtensions)
+      val fresh = builder.getOrCreate()
+      assert(fresh ne suite, "builder returned the suite session")
+      body(fresh)
     } finally {
-      SparkSession.setDefaultSession(ext)
-      SparkSession.setActiveSession(ext)
+      SparkSession.setDefaultSession(suite)
+      SparkSession.setActiveSession(suite)
     }
   }
 
@@ -39,7 +42,7 @@ class KernelInstallSpec extends SparkSuite {
     SparkEntry.queries(name)(s, sf()).collect().toSeq.sortBy(_.toString)
 
   test("install registers the kernels on a plain session exactly once") {
-    withPlainSession { plain =>
+    withFreshSession(extension = false) { plain =>
       assert(!plain.catalog.functionExists("graft_topk"))
       GraftExtensions.install(plain)
       GraftExtensions.install(plain)
@@ -50,14 +53,21 @@ class KernelInstallSpec extends SparkSuite {
       assert(top.getSeq[Row](0).map(_.getLong(1)) == Seq(4L, 3L))
     }
     // the extension session already has everything: install is a no-op
-    GraftExtensions.install(spark)
-    assert(!spark.experimental.extraOptimizations.contains(RewriteVectorHofs))
+    withFreshSession(extension = true) { ext =>
+      GraftExtensions.install(ext)
+      assert(!ext.experimental.extraOptimizations.contains(RewriteVectorHofs))
+    }
+    // the suite session is the factory's: kernels from install, not the extension
+    assert(spark.experimental.extraOptimizations.count(_ eq RewriteVectorHofs) == 1)
+    assert(spark.catalog.functionExists("graft_topk"))
   }
 
   test("SparkEntry queries on a plain session match the extension session") {
     val names = Seq("q65_heavy_hitters", "q92_stratified_sample", "q52_ann_lsh")
-    val expected = names.map(n => n -> rows(spark, n)).toMap
-    withPlainSession { plain =>
+    val expected = withFreshSession(extension = true) { ext =>
+      names.map(n => n -> rows(ext, n)).toMap
+    }
+    withFreshSession(extension = false) { plain =>
       names.foreach { n =>
         val got = rows(plain, n)
         assert(got.nonEmpty, s"$n returned no rows")
@@ -67,7 +77,7 @@ class KernelInstallSpec extends SparkSuite {
   }
 
   test("a StatefulOps kernel operator runs on a plain session") {
-    withPlainSession { plain =>
+    withFreshSession(extension = false) { plain =>
       implicit val sqlCtx = plain.sqlContext
       import plain.implicits._
       val in = MemoryStream[(Long, String, Timestamp)]
@@ -91,21 +101,25 @@ class KernelInstallSpec extends SparkSuite {
 
   test("main has one code path: no functionExists dispatch, no *Hof forms") {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
-    val offenders = files.flatMap { f =>
-      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
-      // the body of GraftExtensions.install: its def line through the
-      // first closing brace at the def's indentation
-      val allowed: Set[Int] = lines.indexWhere(_.contains("def install(")) match {
+    def sources(dir: String): Seq[(java.nio.file.Path, IndexedSeq[String])] = {
+      val root = java.nio.file.Paths.get(dir)
+      val files = java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+      assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+      files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+    }
+    // the lines of `def <name>`: its def line through the first closing
+    // brace at the def's indentation
+    def body(lines: IndexedSeq[String], name: String): Set[Int] =
+      lines.indexWhere(_.contains(s"def $name")) match {
         case -1 => Set.empty
         case start =>
           val indent = lines(start).takeWhile(_ == ' ')
-          val end = lines.indexWhere(_ == indent + "}", start)
-          (start to end).toSet
+          (start to lines.indexWhere(_ == indent + "}", start)).toSet
       }
+    val mainSources = sources("src/main/scala")
+    val dispatch = mainSources.flatMap { case (f, lines) =>
+      val allowed = body(lines, "install(")
       lines.zipWithIndex.collect {
         case (l, i) if l.contains("functionExists") && !allowed(i) =>
           s"$f:${i + 1}: $l"
@@ -113,6 +127,20 @@ class KernelInstallSpec extends SparkSuite {
           s"$f:${i + 1}: $l"
       }
     }
+    // one session factory: a builder only in Sessions and in this spec's
+    // fresh-session helper
+    val builders = (mainSources ++ sources("src/test/scala")).flatMap { case (f, lines) =>
+      val allowed = f.getFileName.toString match {
+        case "Sessions.scala" => lines.indices.toSet
+        case "KernelInstallSpec.scala" => body(lines, "withFreshSession[")
+        case _ => Set.empty[Int]
+      }
+      lines.zipWithIndex.collect {
+        case (l, i) if """SparkSession\.builder""".r.findFirstIn(l).isDefined && !allowed(i) =>
+          s"$f:${i + 1}: $l"
+      }
+    }
+    val offenders = dispatch ++ builders
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

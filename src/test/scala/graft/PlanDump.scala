@@ -2,13 +2,24 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Diagnostic main (test scope): regenerate PLANS.md — the formatted
   * physical plans of the scale-critical catalog queries, for plan
   * auditing without running the engine.
   *
   *   sbt "Test/runMain graft.PlanDump [sfDir] [outFile]"
+  *
+  * `--snap` instead dumps the plans of a set of entries to
+  * plans/<tag>/<name>_<suffix>.txt — the optimization rounds'
+  * plan-evidence artifact — on the bench's `SPARK_GRAFT_SF_DIR` and
+  * `SPARK_GRAFT_CPUS`. Probe-carrying entries dump the probe plan too
+  * (`<name>_probe_<suffix>.txt`), since that is the serving plan the
+  * bench times:
+  *
+  *   sbt "Test/runMain graft.PlanDump --snap r19 before q41_dedup_minhash,q43_ngram_jaccard"
+  *   sbt "Test/runMain graft.PlanDump --snap r19 after all"   # every headline entry
   */
 object PlanDump {
   val Audited: Seq[(String, String)] = Seq(
@@ -146,16 +157,28 @@ object PlanDump {
     "q244_calibration_error" -> "ECE/MCE: one corpus scan → decile hash-agg; ECE folds the ≤10 bin terms in bin order (cross-engine-exact ordered sum), MCE is an order-free max; two 1-row broadcast crosses",
     "q246_corpus_sink_roundtrip" -> "CorpusSink round-trip: ONE documents scan into the salted lang-partitioned write (shard column exists only to spread the exchange, dropped before the files), read-back aggregates at lang grain — per-partition sorted-digest sha2, file-count bound as a post-aggregate predicate")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq("--snap", tag, suffix, which @ _*) => snap(tag, suffix, which.headOption)
+    case _ => dump(args)
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  /** Run `body` once per entry on an empty cache: an earlier entry's
+    * persist must not rewrite a later entry's dumped plan via
+    * useCachedData.
+    */
+  private def isolated[T](spark: SparkSession, entries: Seq[T])(body: T => Unit): Unit =
+    entries.foreach { e =>
+      spark.sharedState.cacheManager.clearCache()
+      try body(e) finally Caches.release(spark)
+    }
+
+  private def dump(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, 8)
     val sb = new StringBuilder
     sb.append("# Physical plans of the scale-critical queries\n\n")
     sb.append("Generated by `sbt \"Test/runMain graft.PlanDump\"` — regenerate after\n")
@@ -163,16 +186,11 @@ object PlanDump {
     sb.append("(broadcast/SMJ choice, pushdown, pruning, codegen, no unintended\n")
     sb.append("CartesianProduct/BNLJ) on every catalog query; this file is the\n")
     sb.append("human-readable audit trail.\n")
-    Audited.foreach { case (name, note) =>
-      // per-entry cache isolation: an earlier entry's persist must not
-      // rewrite a later entry's dumped plan via useCachedData
-      spark.sharedState.cacheManager.clearCache()
+    isolated(spark, Audited) { case (name, note) =>
       val df = queries.Catalog.all(name).build(spark, sfDir)
       val scans = PlanLint.renderScanCounts(
         PlanLint.factScanCounts(df.queryExecution.optimizedPlan))
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n$note\n\nscans: $scans\n\n```\n$plan```\n")
+      sb.append(s"\n## $name\n\n$note\n\nscans: $scans\n\n```\n${formatted(df)}```\n")
     }
     // Fact-scan count pins for EVERY catalog entry (round-16 verdict
     // item 2): PlanSpec asserts these exact counts, so any regression
@@ -185,8 +203,7 @@ object PlanDump {
     sb.append("once, cache reads free; `-` = no fact scan). Asserted exactly\n")
     sb.append("by PlanSpec — regenerate this file after intentional plan\n")
     sb.append("changes.\n\n```\n")
-    queries.Catalog.all.keys.toSeq.sorted.foreach { name =>
-      spark.sharedState.cacheManager.clearCache()
+    isolated(spark, queries.Catalog.all.keys.toSeq.sorted) { name =>
       val df = queries.Catalog.all(name).build(spark, sfDir)
       val scans = PlanLint.renderScanCounts(
         PlanLint.factScanCounts(df.queryExecution.optimizedPlan))
@@ -196,6 +213,32 @@ object PlanDump {
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote ${Audited.size} plans + " +
       s"${queries.Catalog.all.size} scan-count pins to $out")
+    spark.stop()
+  }
+
+  /** `--snap <tag> <suffix> [names|all]`; `all` (the default) is every
+    * headline entry. A failing entry is reported and skipped.
+    */
+  private def snap(tag: String, suffix: String, which: Option[String]): Unit = {
+    val names = which.filter(_ != "all")
+      .fold(queries.Catalog.headline.keys.toSeq)(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus, cpus)
+    val outDir = Files.createDirectories(Paths.get("plans", tag))
+    isolated(spark, names) { name =>
+      val q = queries.Catalog.all(name)
+      try {
+        Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), formatted(q.build(spark, sfDir)))
+        q.probe.foreach { p =>
+          Files.writeString(outDir.resolve(s"${name}_probe_$suffix.txt"),
+            formatted(p(spark, sfDir)()))
+        }
+        println(s"[plandump] $name done")
+      } catch { case e: Throwable =>
+        println(s"[plandump] $name FAILED: ${e.getMessage}")
+      }
+    }
     spark.stop()
   }
 }

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The duplicate-subtree lint kernel (round-15 verdict item 2), shared
-  * by the enforcing PlanSpec tests and the LintScratch diagnostic main
-  * so the two can never drift.
+/** The duplicate-subtree lint kernel (round-15 verdict item 2), enforced
+  * by PlanSpec; its fact-scan counts are also what PlanDump records into
+  * PLANS.md, so the pins and the record can never drift.
   *
   * The q228/q233 class: a corpus-sized join/aggregate subtree
   * referenced from two places in a query builds TWICE in the physical

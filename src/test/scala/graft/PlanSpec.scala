@@ -550,8 +550,7 @@ class PlanSpec extends SparkSuite {
 
   // ---- duplicate-subtree lint (round-15 verdict item 2) ----------------
   //
-  // The kernel lives in [[PlanLint]] (shared with the LintScratch
-  // diagnostic main so the two can't drift). A flagged entry is excused
+  // The kernel lives in [[PlanLint]]. A flagged entry is excused
   // only if its EXECUTED plan shows Spark reused the computation
   // (ReusedExchange / reused query stage / table cache) or it is
   // allowlisted as a justified re-scan.
@@ -648,8 +647,8 @@ class PlanSpec extends SparkSuite {
         // useCachedData can substitute an EARLIER entry's cache into a
         // LATER entry's plan, turning a genuine duplicated fact subtree
         // into InMemoryRelation leaves the lint ignores — an
-        // iteration-order-dependent false negative. LintScratch (the
-        // single-sourced sibling) already clears per entry.
+        // iteration-order-dependent false negative. PlanDump clears per
+        // entry the same way.
         spark.sharedState.cacheManager.clearCache()
         val df = Catalog.all(name).build(spark, sf())
         // scan-count pin: EXACT match against the PLANS.md record — a

@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main (test scope): run one catalog entry N times and print
   * every Spark job's wall-clock, stage count and task count — the
   * "where do the seconds go" view the bench total cannot give. Usage:
   *
+  *   sbt "Test/runMain graft.ProfJobs <entry> [reps=3] [probe]"
   *   sbt "Test/runMain graft.ProfJobs q45_simhash_hamming 3"
+  *
+  * `probe` times the entry's probe (serving) thunk instead of its build.
+  * Env: `SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS` as for the bench;
+  * `PROF_STAGES` set also prints every completed stage.
   */
 object ProfJobs {
   def main(args: Array[String]): Unit = {
@@ -15,19 +19,7 @@ object ProfJobs {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName("graft-prof")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // A/B override for the AQE coalescing floor experiment (see
-      // OPTIMIZATION_r20.md "not yet optimized"): PROF_MIN_PARTITION
-      // sets spark.sql.adaptive.coalescePartitions.minPartitionSize
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("PROF_MIN_PARTITION", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(cpus.toInt, cpus.toInt)
 
     final case class J(id: Int, t0: Long, var t1: Long = 0L,
                        var stages: Int = 0, var tasks: Int = 0,

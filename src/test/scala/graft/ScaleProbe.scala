@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main (test scope): run the dedup family against an
   * arbitrary documents dir — typically a deliberately duplicate-heavy
   * corpus — to observe the capped-bucket designs under duplicate
@@ -19,13 +17,8 @@ object ScaleProbe {
     // --corescale probe runs this main at two core counts to measure
     // parallel speedup at a corpus size big enough to show it
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (args.lift(1).contains("--corescale"))
+    val spark = Sessions.local(cpus.toInt, cpus.toInt)
+    if (args.lift(1).contains("--corescale"))
       // scan-parallelism floor (guide §6.1), derived from the core
       // count and scoped to the --corescale MODE ONLY so the other
       // probe modes stay comparable with their previously recorded
@@ -36,9 +29,7 @@ object ScaleProbe {
       // cores vs 7.5 s at 32) while shuffle-bound q43 scaled 2.55×.
       // The bench session is untouched (its sf fixtures are
       // single-row-group files that cannot split below the row group).
-      builder.config("spark.sql.files.minPartitionNum", cpus)
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      spark.conf.set("spark.sql.files.minPartitionNum", cpus)
     def time(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f

@@ -3,22 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one lazy SparkSession per suite, UTC, small shuffle
-  * fan-out for local test data.
+/** Shared session: one lazy [[Sessions.local]] session per suite, small
+  * shuffle fan-out for local test data.
   */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // INFO-level executor logs bury the scalatest report lines
-    s.sparkContext.setLogLevel("WARN")
+    val s = Sessions.local(4, 8)
+    // Spark's default aggregation fallback, not the factory's 131072: on
+    // 4 cores that hash regime made ScaleExponentSpec's q45 256x point
+    // ~0.9 s slower (t256 4.75-5.16 s vs 3.90-4.06 s) and its 1.45
+    // exponent pin fail 1 run in 5
+    s.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
     s
   }
 
