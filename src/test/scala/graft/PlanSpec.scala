@@ -507,9 +507,14 @@ class PlanSpec extends SparkSuite {
     "q231_tpch_q11",            // part-grain value × a broadcast 1-row (Σ, n) frame
     "q234_tpch_q22")            // positive-balance customers × a broadcast 1-row (Σ, n) mean
 
+  /** Every entry's executed plan, built once for both catalog-wide audits
+    * below (each used to build all ~240 entries on its own).
+    */
+  private lazy val catalogPlans: Map[String, String] =
+    Catalog.all.keys.map(name => name -> plan(name)).toMap
+
   test("no accidental cartesian or nested-loop joins anywhere in the catalog") {
-    val offenders = Catalog.all.keys.flatMap { name =>
-      val p = plan(name)
+    val offenders = catalogPlans.flatMap { case (name, p) =>
       val cartesian = p.contains("CartesianProduct") && !intentionalCross(name)
       val bnlj = p.contains("BroadcastNestedLoopJoin") && !intentionalNestedLoop(name)
       if (cartesian || bnlj) Some(s"$name: cartesian=$cartesian bnlj=$bnlj") else None
@@ -537,8 +542,7 @@ class PlanSpec extends SparkSuite {
       "q209_spearman",       // midrank cumulatives at distinct-value grain (x ≤ #order-counts, y ≤ #spend-buckets)
       "q227_wau_hll",        // HLL-union RANGE frame at DAY grain (≤ #days rows by construction)
       "q243_gains_table")    // best-first cumulative over the ≤10-row decile grain
-    val offenders = Catalog.all.keys.flatMap { name =>
-      val p = plan(name)
+    val offenders = catalogPlans.flatMap { case (name, p) =>
       val hasGlobalWindow = unpartitioned.unanchored.matches(p)
       val bounded = p.contains("TakeOrderedAndProject") || p.contains("GlobalLimit") ||
         intentionalGlobalWindow(name)

@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.Catalog
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** Wall-time growth-exponent pins (round-16 verdict item 3).
   *
@@ -54,7 +55,7 @@ import org.apache.spark.sql.functions._
   * shapes are visible to this probe at all (it measures ~1.9 at
   * 8/16/32× — clearly above every linear entry).
   */
-class ScaleExponentSpec extends SparkSuite {
+class ScaleExponentSpec extends SparkSuite with BeforeAndAfterAll {
 
   // min-of-4 default: with 3, one window of sustained host load could
   // inflate a whole point's sample set and the delta fit swung (q134
@@ -207,12 +208,35 @@ class ScaleExponentSpec extends SparkSuite {
     * (pairwise Jaccard 0 against all others), so the candidate
     * pipeline itself grows with k — what the exponent must see.
     */
-  private def scaledDir(table: String, idCol: String, k: Int): String = {
+  private def scaledDir(table: String, idCol: String, k: Int): String =
+    fixtures.getOrElseUpdate((table, idCol, k), writeScaled(table, idCol, k))
+
+  /** One fixture per (table, id column, k): a fixture depends on nothing
+    * else, and the documents pins share most of their scale points
+    * (six of them run at 16/64/256×). Deleted when the suite ends.
+    */
+  private val fixtures = scala.collection.mutable.LinkedHashMap.empty[(String, String, Int), String]
+
+  override def afterAll(): Unit = {
+    import scala.jdk.CollectionConverters._
+    try fixtures.values.foreach { d =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists)
+      finally walk.close()
+    } finally super.afterAll()
+  }
+
+  private def writeScaled(table: String, idCol: String, k: Int): String = {
     val dir = tmpDir(s"exp_${table}_$k").toString
     val src = Tables(spark, base, table)
     val block = src.agg(max(col(idCol))).head.getLong(0) + 1L
-    val copies = src
-      .select(col("*"), explode(sequence(lit(0), lit(k - 1))).as("__i"))
+    // the copy index comes from an 8-way range crossed with the
+    // (broadcast, sf0.01-sized) source, so the k copies are built by 8
+    // tasks instead of exploded in the source's single task; the same
+    // round-robin repartition(8) below still deals them into 8 files
+    val copies = spark.range(0L, k.toLong, 1L, 8).select(col("id").cast("int").as("__i"))
+      .crossJoin(broadcast(src))
+      .select(src.columns.map(col) :+ col("__i"): _*)
       .withColumn(idCol, col(idCol) + col("__i") * block)
     val out =
       if (table == "documents")

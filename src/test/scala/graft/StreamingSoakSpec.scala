@@ -22,14 +22,26 @@ import graft.streaming.StatefulOps
   */
 class StreamingSoakSpec extends SparkSuite {
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  /** The soaks' state settings: the RocksDB provider with changelog
+    * checkpointing (each commit writes the batch's changes instead of
+    * uploading a full snapshot of every partition), and one state
+    * partition per core of the suite's local[4] session instead of two.
+    * A batch's cost is almost all per-partition state commits: on a
+    * 4-core host the spec went from about 11 to 7 minutes. The asserted
+    * row counts are totals over all partitions, and every state series
+    * printed the same under the old settings.
+    */
+  private def withSoakConf[T](body: => T): T = {
+    val settings = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "4")
+    val prior = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -52,7 +64,7 @@ class StreamingSoakSpec extends SparkSuite {
   }
 
   test("soak: minhashPairsStream bucket state plateaus at the watermark horizon (120 batches)") {
-    withRocksDb {
+    withSoakConf {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val in = MemoryStream[(Long, String, Timestamp)]
@@ -93,7 +105,7 @@ class StreamingSoakSpec extends SparkSuite {
   }
 
   test("soak: windowed quality + funnel monitors hold open-window state only (100 batches)") {
-    withRocksDb {
+    withSoakConf {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val in = MemoryStream[(Timestamp, String, String)]
@@ -141,7 +153,7 @@ class StreamingSoakSpec extends SparkSuite {
   }
 
   test("soak: AUC + calibration monitors hold open-window × bin state only (100 batches)") {
-    withRocksDb {
+    withSoakConf {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val in = MemoryStream[(Timestamp, String, Option[Double])]
@@ -203,7 +215,7 @@ class StreamingSoakSpec extends SparkSuite {
     // population that churns (2 new users per batch, each active for 5
     // batches) must plateau at the active+expiry-lag working set, not
     // accumulate all 200+ users ever seen.
-    withRocksDb {
+    withSoakConf {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val inT = MemoryStream[(Long, Timestamp, Long, String)]
@@ -265,7 +277,7 @@ class StreamingSoakSpec extends SparkSuite {
     // (2 new users per batch, each active 5 batches) must plateau at
     // the active+expiry-lag working set, never accumulate all 200+
     // users ever seen.
-    withRocksDb {
+    withSoakConf {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val inS = MemoryStream[(Long, Timestamp, Long, String)]
@@ -330,7 +342,7 @@ class StreamingSoakSpec extends SparkSuite {
     // the horizon actually engages: users live 5 batches (12 h), state
     // survives ~10 more (24 h), then must vanish. 200 users are created
     // over the run; the bound is active + expiry lag ≈ 30, pinned at 64.
-    withRocksDb {
+    withSoakConf {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val in = MemoryStream[(Long, Timestamp, Long, String, Double)]
