@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, LinkOption, Paths}
+import java.nio.file.{Files, LinkOption, Paths, StandardCopyOption}
 
 import graft.config.A2Config
 import graft.ingest.{AuditIngest, SettleGate}
@@ -58,7 +58,8 @@ object Agent {
   /** Launch the full pipeline against an existing session, installing
     * the graft kernels on it first (a no-op when the session was built
     * with the extension). The watched dir must exist (reference exit-4
-    * check, OraaudKafka.java:152-173).
+    * check, OraaudKafka.java:152-173) and share a file system with the
+    * settled dir, or no settle-gate rename could ever succeed.
     *
     * `kinesisTransport` is the offline KPL stand-in (R12 seam): it
     * receives the conditional-gzip (key, value BINARY) frame per batch;
@@ -75,12 +76,19 @@ object Agent {
     require(Files.exists(watched, LinkOption.NOFOLLOW_LINKS) && Files.isDirectory(watched),
       s"a2.watched.path '${cfg.watchedPath}' is not an existing directory") // exit 4
 
-    Files.createDirectories(Paths.get(cfg.settledDir))
+    val settled = Files.createDirectories(Paths.get(cfg.settledDir))
+    val probeMove = Try {
+      val probe = Files.createTempFile(watched, ".a2-move-probe", ".tmp")
+      try Files.delete(Files.move(probe, settled.resolve(probe.getFileName), StandardCopyOption.ATOMIC_MOVE))
+      finally Files.deleteIfExists(probe)
+    }
+    require(probeMove.isSuccess, s"settled dir '$settled' cannot take an atomic rename from " +
+      s"a2.watched.path '$watched' (${probeMove.failed.get}); keep a2.agent.work.dir on its file system")
 
     // R5: settle-gate mover — raw watched dir → settled dir the stream
     // reads, so the source only ever discovers closed files.
     val mover = SettleGate.startMover(
-      watched, Paths.get(cfg.settledDir),
+      watched, settled,
       settleMs = cfg.settleDelayMs, pollMs = cfg.pollIntervalMs,
       lockChecker = lockCheckerForOs(sys.props.getOrElse("os.name", "")))
 
@@ -98,9 +106,7 @@ object Agent {
         Some((batch, _) =>
           ShipSinks.frame(batch).write.format("kafka").options(cfg.kafkaSinkOptions).save())
       case "kinesis" =>
-        val transport = kinesisTransport.getOrElse(
-          (b: DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"${cfg.mirrorDir}/batch=$id"))
+        val transport = kinesisTransport.getOrElse(ShipSinks.overwriteBatch(_, cfg.mirrorDir, _))
         Some((batch, id) => transport(ShipSinks.kinesisFrame(batch, cfg), id))
     }
 
@@ -116,12 +122,13 @@ object Agent {
   }
 
   /** Graceful shutdown: stop the stream (flush parity with the
-    * reference's producer flush+close hook), halt the mover, unregister
-    * the MBean and listener.
+    * reference's producer flush+close hook), halt the mover (joined, so
+    * no rename lands after this returns), unregister the MBean and listener.
     */
   def stop(r: Running, spark: SparkSession): Unit = {
     Try(r.query.stop())
     r.mover.interrupt()
+    r.mover.join(5000)
     Try(spark.streams.removeListener(r.metrics))
     Try(java.lang.management.ManagementFactory.getPlatformMBeanServer.unregisterMBean(r.mbean))
   }

@@ -41,36 +41,58 @@ object Bench {
   /** Re-measures allowed per entry before publishing the best stat. */
   val MaxReruns = 2
 
-  /** Busy jiffies (user+nice+system+irq+softirq+steal — idle and
-    * iowait excluded; Linux folds guest into user) from /proc/stat's
-    * aggregate cpu line, summed across all CPUs. Sampled around each
-    * timed run: the delta minus this process's own jiffies is CPU the
-    * host spent on OTHER work during exactly the sample window — the
-    * sample-granularity external contention witness (round-18 advice:
-    * the 1-min loadavg is exponentially damped on a minutes scale, so
-    * a transient burst competing with a sub-second sample barely moves
-    * it and the witness never fires). -1 when /proc is unavailable.
+  /** (busy, steal, total) jiffies summed over all CPUs from /proc/stat's
+    * aggregate cpu line; None without /proc. busy = user+nice+system+irq+
+    * softirq+steal (idle and iowait excluded); total = the first 8 fields
+    * (user..steal): Linux folds guest into user, so summing all 10
+    * double-counts guest time and understates steal.
     */
-  private[graft] def hostBusyJiffies(): Long = try {
+  private def cpuJiffies(): Option[(Long, Long, Long)] = try {
     val line = scala.io.Source.fromFile("/proc/stat").getLines().next()
     val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-    Seq(0, 1, 2, 5, 6, 7).filter(_ < f.length).map(f).sum
-  } catch { case _: Throwable => -1L }
+    Some((Seq(0, 1, 2, 5, 6, 7).filter(_ < f.length).map(f).sum,
+      if (f.length > 7) f(7) else 0L, f.take(8).sum))
+  } catch { case _: Throwable => None }
 
-  /** (stealJiffies, totalJiffies) from /proc/stat's aggregate cpu line.
-    * Hypervisor CPU steal is the failure mode `ps` cannot see — the
-    * round-13 spreads happened with nothing else runnable in the
-    * guest — so the quiet verdict is anchored on the steal delta over
-    * the bench window, not on guest-local load alone.
+  /** What a [[ContentionWindow]] saw over `wallS` seconds: hypervisor
+    * steal as a fraction of host jiffies (0 when unreadable), the average
+    * cores the host spent on work OUTSIDE this process (steal included),
+    * and this process's own CPU seconds; -1 where a counter was missing.
     */
-  private[graft] def cpuJiffies(): (Long, Long) = try {
-    val line = scala.io.Source.fromFile("/proc/stat").getLines().next()
-    val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-    // total = user..steal (first 8 fields) only: Linux folds guest /
-    // guest_nice into user, so summing all 10 double-counts guest time
-    // and understates steal_pct
-    (if (f.length > 7) f(7) else 0L, f.take(8).sum)
-  } catch { case _: Throwable => (0L, 0L) }
+  final case class Contention(wallS: Double, stealPct: Double, otherCores: Double,
+                              selfCpuS: Double) {
+    /** Evidence of contention (steal ≥ 1 %, or otherCores ≥ barCores). */
+    def witness(barCores: Double = Runtime.getRuntime.availableProcessors() / 4.0): Option[String] =
+      Option.when(stealPct >= 0.01 || otherCores >= barCores)(
+        f"steal ${stealPct * 100}%.1f%% (bar 1%%), other_cores " +
+          f"$otherCores%.1f (bar $barCores%.1f) over $wallS%.1f s")
+  }
+
+  /** The one host-contention witness, from counters taken when the window
+    * opens. Steal is what `ps` cannot see (the round-13 spreads happened
+    * with nothing else runnable in the guest); other-process cores move at
+    * window granularity, where the 1-min loadavg is minutes-damped, misses
+    * a short burst and counts this process as load (round-18 advice).
+    */
+  final class ContentionWindow {
+    private val (jiffies0, self0, t0) = (cpuJiffies(), processCpuSeconds(), System.nanoTime())
+
+    def read(): Contention = {
+      val (jiffies1, self1) = (cpuJiffies(), processCpuSeconds())
+      val wall = (System.nanoTime() - t0) / 1e9
+      val selfCpu = if (self0 < 0 || self1 < 0) -1.0 else self1 - self0
+      (jiffies0, jiffies1) match {
+        case (Some((busy0, steal0, total0)), Some((busy1, steal1, total1))) =>
+          Contention(wall,
+            if (total1 > total0) (steal1 - steal0).toDouble / (total1 - total0) else 0.0,
+            // clamped at 0: jiffy-vs-ns rounding
+            if (selfCpu < 0 || wall <= 0) -1.0
+            else math.max(0.0, ((busy1 - busy0) / 100.0 - selfCpu) / wall),
+            selfCpu)
+        case _ => Contention(wall, 0.0, -1.0, selfCpu)
+      }
+    }
+  }
 
   private def ppidOf(pid: Long): Long = try {
     val s = new String(java.nio.file.Files.readAllBytes(
@@ -131,7 +153,7 @@ object Bench {
     * 100 on every Linux ABI — it is a fixed kernel-to-user constant,
     * not the kernel HZ); falls back to the JMX process-CPU counter.
     */
-  private[graft] def processCpuSeconds(): Double = try {
+  private def processCpuSeconds(): Double = try {
     val s = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
     // comm (field 2) may contain spaces/parens; fields resume after
@@ -172,12 +194,8 @@ object Bench {
 
   /** One timed sample: wall seconds plus the GC ms, process-CPU
     * seconds, the 1-min system load at the sample's end (context), and
-    * `otherCores` — average CPU cores the host spent on work OUTSIDE
-    * this process during exactly the sample window (non-self busy
-    * jiffies / wall; steal counts as non-self). `otherCores` is the
-    * external contention witness (round-18 advice: it moves at sample
-    * granularity where loadavg's minutes-scale damping cannot); -1
-    * when a counter was unavailable.
+    * `otherCores`, the [[ContentionWindow]] witness over exactly the
+    * sample window (-1 when a counter was unavailable).
     */
   final case class Sample(sec: Double, gcMs: Long, cpuS: Double,
                           load: Double = -1.0, otherCores: Double = -1.0)
@@ -257,7 +275,7 @@ object Bench {
     // last timed sample. quiet=true asserts: no hypervisor steal over
     // the bench window (< 5% of elapsed jiffies) and no guest-local
     // process outside our tree burning a core at either checkpoint.
-    val (steal0, jiffies0) = cpuJiffies()
+    val benchWindow = new ContentionWindow
     val loadBefore = loadAvg()
     val competingBefore = competingPids()
 
@@ -343,21 +361,11 @@ object Bench {
     }
     def withMeters(f: => Double): Sample = {
       val g0 = gcMsNow()
-      val c0 = processCpuSeconds()
-      val h0 = hostBusyJiffies()
-      val t0 = System.nanoTime()
+      // external CPU over exactly this sample's window
+      val window = new ContentionWindow
       val s = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      val h1 = hostBusyJiffies()
-      val c1 = processCpuSeconds()
-      // external CPU over exactly this sample's window: host busy
-      // cores minus our own, clamped at 0 (jiffy-vs-ns rounding)
-      val other =
-        if (h0 < 0 || h1 < 0 || c0 < 0 || c1 < 0 || wall <= 0) -1.0
-        else math.max(0.0, ((h1 - h0) / 100.0 - (c1 - c0)) / wall)
-      Sample(s, gcMsNow() - g0,
-        if (c0 < 0 || c1 < 0) -1.0 else c1 - c0,
-        loadAvg(), other)
+      val c = window.read()
+      Sample(s, gcMsNow() - g0, c.selfCpuS, loadAvg(), c.otherCores)
     }
     // spread-triggered re-measure (round-13 verdict item 1): a stat
     // whose max/min exceeds SpreadLimit is re-sampled up to MaxReruns
@@ -451,13 +459,9 @@ object Bench {
 
     // closing quiet checkpoint: measured AFTER the last timed sample so
     // the steal fraction covers exactly the window the stats came from
-    val (steal1, jiffies1) = cpuJiffies()
+    val stealPct = benchWindow.read().stealPct
     val loadAfter = loadAvg()
     val competingAfter = competingPids()
-    val stealPct =
-      if (jiffies1 > jiffies0)
-        (steal1 - steal0).toDouble / (jiffies1 - jiffies0).toDouble
-      else 0.0
     // quiet also requires the machine to have been idle-ish when the
     // bench STARTED: BENCH_r15 recorded quiet=true at load_before 10.28
     // on 32 CPUs (steal and competing checks can't see load that drains

@@ -66,8 +66,8 @@ final case class A2Config(
       "kafka.compression.type" -> kafkaCompression) ++
       kafkaOptions.map { case (k, v) => s"kafka.$k" -> v }
 
-  /** Kinesis client settings for the transport behind the seam
-    * ([[graft.sinks.ShipSinks.kinesisSeam]]) — the typed form of what
+  /** Kinesis client settings for the agent's Kinesis transport (the
+    * `kinesisTransport` of graft.Agent.start) — the typed form of what
     * KinesisSingleton.java:70-157 feeds its producer configuration:
     * identity/endpoint plus the tuning knobs (connections, timeout,
     * max buffered time). Keys are the reference property names with the
@@ -86,7 +86,8 @@ final case class A2Config(
   /** Agent working directories (graft.Agent): the settle-gate target the
     * stream actually watches, checkpoint, DLQ, and (mirror target only)
     * the parquet mirror — all under one work dir so a single `a2.*` key
-    * relocates the agent's mutable state off the watched volume.
+    * relocates the agent's mutable state — on the watched dir's file
+    * system, which the settle gate's atomic renames need (Agent.start checks).
     */
   def agentWorkDir: String = workDir.getOrElse(s"$watchedPath/.graft")
   def settledDir: String = s"$agentWorkDir/settled"

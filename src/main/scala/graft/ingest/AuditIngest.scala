@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.sinks.ShipSinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
@@ -52,7 +53,8 @@ object AuditIngest {
   /** R15 metrics: running files/bytes/time counters (reference
     * CommonJobMgmt.java:21-30 AtomicLongs, exposed over JMX; here fed by
     * `observe()` rows via a StreamingQueryListener and registered as a
-    * standard MBean by [[registerMBean]]).
+    * standard MBean by [[registerMBean]]). The listener hears every
+    * query on the session; only progress carrying `audit_ingest` counts.
     */
   final class IngestMetrics extends StreamingQueryListener with IngestMetricsMBean {
     private val startTimeMillis = System.currentTimeMillis()
@@ -68,9 +70,9 @@ object AuditIngest {
         val row = om.get("audit_ingest")
         filesCount.addAndGet(row.getAs[Long]("n_files"))
         filesSize.addAndGet(Option(row.getAs[java.lang.Long]("n_bytes")).map(_.toLong).getOrElse(0L))
+        processingTimeMs.addAndGet(
+          Option(e.progress.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L))
       }
-      processingTimeMs.addAndGet(
-        Option(e.progress.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L))
     }
 
     private def fmt(millis: Long): String = {
@@ -118,21 +120,21 @@ object AuditIngest {
     *
     * `ship` overrides the complete-branch sink (default: parquet mirror
     * under mirrorDir/batch=N) — the seam graft.Agent uses to route the
-    * same stream to Kafka or the Kinesis transport.
+    * same stream to Kafka or the Kinesis transport. It is the only way a
+    * frame leaves the agent.
     */
   def startStream(
       spark: SparkSession,
       ingestDir: String, mirrorDir: String, dlqDir: String,
       checkpointDir: String, host: String,
       triggerMs: Long = 500, maxFilesPerTrigger: Int = 512,
-      deleteSource: Boolean = true,
       ship: Option[(DataFrame, Long) => Unit] = None): StreamingQuery = {
 
     val raw = spark.readStream.format("text")
       .option("wholetext", "true")
       .option("pathGlobFilter", "*.xml")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("cleanSource", if (deleteSource) "delete" else "off")
+      .option("cleanSource", "delete")
       .load(ingestDir)
       .select(
         col("value").as("payload"),
@@ -152,26 +154,14 @@ object AuditIngest {
         val b = batch.persist()
         try {
           val complete = b.filter(col("complete")).drop("complete")
-          ship match {
-            case Some(f) => f(complete, batchId)
-            case None =>
-              complete.write.mode("overwrite").parquet(s"$mirrorDir/batch=$batchId")
-          }
-          b.filter(!col("complete"))
-            .withColumn("reason", lit("incomplete: missing </Audit> terminator"))
-            .write.mode("overwrite")
-            .parquet(s"$dlqDir/batch=$batchId")
+          ship.getOrElse(ShipSinks.overwriteBatch(_, mirrorDir, _))(complete, batchId)
+          ShipSinks.overwriteBatch(
+            b.filter(!col("complete"))
+              .withColumn("reason", lit("incomplete: missing </Audit> terminator")),
+            dlqDir, batchId)
         } finally b.unpersist()
         ()
       }
       .start()
   }
-
-  /** The (key, value) frame a Kafka sink would receive — the mirror holds
-    * the identical frame, so tests assert sink-contract parity without a
-    * broker (SURVEY §2.2 Q4). With a real cluster this becomes
-    * `.writeStream.format("kafka").options(cfg.kafkaSinkOptions)`.
-    */
-  def kafkaFrame(mirror: DataFrame): DataFrame =
-    mirror.select(col("key"), col("value"))
 }

@@ -90,39 +90,43 @@ object SettleGate {
       }.getOrElse(false)
   }
 
-  /** Pure mtime heuristic — the default gate where no /proc is usable
-    * (cluster executors, non-Linux): settled iff untouched for settleMs.
-    */
-  final class MTimeChecker(settleMs: Long, now: () => Long = () => System.currentTimeMillis()) {
-    def isSettled(f: Path): Boolean =
-      Try(now() - Files.getLastModifiedTime(f).toMillis >= settleMs).getOrElse(false)
-  }
+  /** Source files whose move has failed, so each is logged once. */
+  private val unmovable = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
   /** One mover tick: move every settled `*.xml` from rawDir → ingestDir.
-    * Returns the moved file names. `lockChecker` is consulted only when a
-    * PID can be parsed from the name (reference parity); the mtime settle
-    * gate always applies.
+    * Returns the moved file names. A file is settled once untouched for
+    * settleMs (the mtime gate, which always applies); `lockChecker` is
+    * consulted only when a PID can be parsed from the name (reference
+    * parity). A file whose move fails is skipped — logged the first
+    * time — and the rest of the tick goes on, so one poison file cannot
+    * stall every file listed after it.
     */
   def tick(rawDir: Path, ingestDir: Path, settleMs: Long,
            lockChecker: Option[LockChecker] = None,
            now: () => Long = () => System.currentTimeMillis()): Seq[String] = {
     Files.createDirectories(ingestDir)
-    val mtime = new MTimeChecker(settleMs, now)
     val stream = Files.list(rawDir)
     try {
       stream.iterator().asScala
         .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".xml"))
-        .filter(mtime.isSettled)
+        .filter(f => Try(now() - Files.getLastModifiedTime(f).toMillis >= settleMs).getOrElse(false))
         .filter { f =>
           lockChecker.forall { lc =>
             AuditModel.referencePidParse(f.toString)
               .forall(pid => !lc.isLocked(pid, f.toString))
           }
         }
-        .map { f =>
-          val dst = ingestDir.resolve(f.getFileName)
-          Files.move(f, dst, StandardCopyOption.ATOMIC_MOVE)
-          dst.getFileName.toString
+        .flatMap { f =>
+          try {
+            Files.move(f, ingestDir.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+            Some(f.getFileName.toString)
+          } catch {
+            case e: java.io.IOException =>
+              if (unmovable.add(f))
+                org.apache.log4j.Logger.getLogger(getClass)
+                  .warn(s"settle gate cannot move $f into $ingestDir, skipping it: $e")
+              None
+          }
         }
         .toSeq
     } finally stream.close()
@@ -130,15 +134,18 @@ object SettleGate {
 
   /** Background mover thread with the reference's scheduling shape
     * (scheduleWithFixedDelay, initial 256 ms — OraaudKafka.java:248-259).
+    * An interrupt ends the loop.
     */
   def startMover(rawDir: Path, ingestDir: Path, settleMs: Long, pollMs: Long,
                  lockChecker: Option[LockChecker] = None): Thread = {
     val t = new Thread(() => {
-      Thread.sleep(256)
-      while (!Thread.currentThread().isInterrupted) {
-        Try(tick(rawDir, ingestDir, settleMs, lockChecker))
-        Thread.sleep(pollMs)
-      }
+      try {
+        Thread.sleep(256)
+        while (!Thread.currentThread().isInterrupted) {
+          Try(tick(rawDir, ingestDir, settleMs, lockChecker))
+          Thread.sleep(pollMs)
+        }
+      } catch { case _: InterruptedException => () }
     }, "settle-gate-mover")
     t.setDaemon(true)
     t.start()

@@ -4,38 +4,28 @@ import graft.config.A2Config
 import graft.functions.Gzip
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
 
-/** Sink surface (reference R11 Kafka / R12 Kinesis / Q4-Q5):
-  * every sink consumes the canonical `(key STRING, value STRING)` frame
-  * the ingest envelope produces.
+/** Sink surface (reference R11 Kafka / R12 Kinesis / Q4-Q5): every sink
+  * consumes the canonical `(key, value)` frame the ingest envelope
+  * produces, and every frame leaves through one place — the arms of
+  * `graft.Agent.start`'s `foreachBatch` ship function, behind the settle
+  * gate and the DLQ split of `AuditIngest.startStream`.
   *
-  * - Kafka: the built-in `format("kafka")` sink; all `a2.kafka.*` keys
-  *   pass through 1:1 (reference KafkaSingleton.java:65-139 — producer
-  *   config incl. compression.type=gzip default).
+  * - Kafka: the built-in `format("kafka")` batch writer per micro-batch;
+  *   all `a2.kafka.*` keys pass through 1:1 (reference
+  *   KafkaSingleton.java:65-139 — producer config incl.
+  *   compression.type=gzip default).
   * - Kinesis: no connector offline (reference KinesisJob/KinesisSingleton);
-  *   kept as a seam — the record-level transform (R9 conditional gzip
-  *   above the 512-byte threshold, KinesisJob.java:66-73) is real and
-  *   tested, the transport is pluggable via foreachBatch.
-  * - Parquet mirror: the test/verification sink carrying the identical
+  *   the record-level transform (R9 conditional gzip above the 512-byte
+  *   threshold, KinesisJob.java:66-73) is real and tested, the transport
+  *   is the agent's pluggable `kinesisTransport`.
+  * - Parquet mirror: the verification sink carrying the identical
   *   frame, so sink-contract tests need no broker.
   */
 object ShipSinks {
 
   /** The canonical sink frame: exactly (key, value). */
   def frame(df: DataFrame): DataFrame = df.select(col("key"), col("value"))
-
-  /** R11: configure the built-in Kafka sink from a2.* config. Returned
-    * writer still needs `.start()`; requires a reachable broker.
-    */
-  def kafka(df: DataFrame, cfg: A2Config, checkpointDir: String): DataStreamWriter[Row] = {
-    require(cfg.targetBroker == "kafka", "config targets " + cfg.targetBroker)
-    frame(df).writeStream
-      .format("kafka")
-      .options(cfg.kafkaSinkOptions)
-      .option("checkpointLocation", checkpointDir)
-  }
 
   /** R12/R9: Kinesis-shaped frame — key plus a BINARY value that is
     * gzip-compressed only above the size threshold (conditional
@@ -46,16 +36,11 @@ object ShipSinks {
     df.select(col("key"),
       Gzip.gzip_if_large(col("value"), lit(cfg.kinesisSizeThreshold)).as("value"))
 
-  /** R12 transport seam: per-batch handoff of the Kinesis frame to a
-    * pluggable writer (the offline stand-in for KPL addUserRecord).
+  /** Write one micro-batch as parquet under `dir/batch=N`, replacing
+    * whatever a failed attempt of the same batch left there: a replay of
+    * batch N rewrites the same directory, which is what makes the mirror,
+    * the DLQ and the default Kinesis transport idempotent sinks.
     */
-  def kinesisSeam(df: DataFrame, cfg: A2Config, checkpointDir: String, triggerMs: Long)(
-      write: (DataFrame, Long) => Unit): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        write(kinesisFrame(batch, cfg), id); ()
-      }
-      .start()
+  def overwriteBatch(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
 }

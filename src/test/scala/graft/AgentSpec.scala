@@ -1,7 +1,8 @@
 package graft
 
 import java.lang.management.ManagementFactory
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import graft.config.A2Config
 import graft.ingest.SettleGate
@@ -63,6 +64,8 @@ class AgentSpec extends SparkSuite {
     val cfg = A2Config.fromFile(confFile(watched, work, "mirror").toString)
     assert(cfg.settledDir.startsWith(work.toString))
     val r = Agent.start(spark, cfg)
+    val moverFailures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    r.mover.setUncaughtExceptionHandler((_, e) => moverFailures.add(e))
     try {
       def mirrorCount = Try2(spark.read.parquet(cfg.mirrorDir).count()).getOrElse(0L)
       assert(await()(mirrorCount == 2), "complete files never reached the mirror")
@@ -86,7 +89,8 @@ class AgentSpec extends SparkSuite {
     } finally Agent.stop(r, spark)
 
     assert(!r.query.isActive, "stream must stop on shutdown")
-    assert(await(5000)(!r.mover.isAlive), "mover thread must exit on interrupt")
+    assert(!r.mover.isAlive, "mover thread must have exited when stop returns")
+    assert(moverFailures.isEmpty, s"mover must end cleanly on interrupt: $moverFailures")
     assert(!ManagementFactory.getPlatformMBeanServer.isRegistered(r.mbean))
   }
 
@@ -114,6 +118,63 @@ class AgentSpec extends SparkSuite {
         s"${big.length}-byte frame over the ${cfg.kinesisSizeThreshold}-byte threshold must gzip")
       assert(new String(graft.functions.Gzip.decompress(big), "UTF-8").endsWith("</Audit>"))
     } finally Agent.stop(r, spark)
+  }
+
+  test("JMX counts only the agent's own query, not other streams on the session") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import spark.implicits._
+    val watched = tmpDir("agent_jmx"); val work = tmpDir("agent_jmx_work")
+    val r = Agent.start(spark, A2Config.fromFile(confFile(watched, work, "mirror").toString))
+    // registered after the agent's listener: the listener bus delivers
+    // each event to listeners in registration order, so once this one
+    // has seen the unrelated query's data batch, the agent's has too
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val other = MemoryStream[Int]
+    val seen = new CountDownLatch(1)
+    val probe = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == "unrelated" && e.progress.numInputRows > 0) seen.countDown()
+    }
+    spark.streams.addListener(probe)
+    val q = other.toDF().writeStream.queryName("unrelated").format("memory").start()
+    try {
+      other.addData(1, 2, 3)
+      q.processAllAvailable()
+      assert(seen.await(30, TimeUnit.SECONDS), "unrelated query never reported progress")
+      val mbs = ManagementFactory.getPlatformMBeanServer
+      assert(mbs.getAttribute(r.mbean, "FilesCount").asInstanceOf[Long] == 0L)
+      assert(mbs.getAttribute(r.mbean, "TransferTimeMillis").asInstanceOf[Long] == 0L)
+    } finally {
+      q.stop(); spark.streams.removeListener(probe); Agent.stop(r, spark)
+    }
+  }
+
+  test("work dir on another file system fails at start, naming both dirs") {
+    val watched = tmpDir("agent_xvol")
+    val shm = Paths.get("/dev/shm")
+    assume(Files.isDirectory(shm) && Files.isWritable(shm), "no writable /dev/shm on this host")
+    val work = Files.createTempDirectory(shm, "agent_xvol_work")
+    try {
+      assume(Files.getFileStore(watched) != Files.getFileStore(work),
+        s"$watched and $work are on one file store: no cross-volume move to refuse")
+      val cfg = A2Config.fromFile(confFile(watched, work, "mirror").toString)
+      val e = intercept[IllegalArgumentException] {
+        val r = Agent.start(spark, cfg)
+        Agent.stop(r, spark)
+      }
+      assert(e.getMessage.contains(cfg.settledDir) && e.getMessage.contains(watched.toString),
+        e.getMessage)
+      // the probe left nothing behind in the watched dir
+      val left = Files.list(watched)
+      try assert(left.count() == 0L) finally left.close()
+    } finally {
+      val s = Files.walk(work)
+      try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally s.close()
+    }
   }
 
   test("per-OS lock-checker dispatch matches OraaudKafka.java:192-205") {

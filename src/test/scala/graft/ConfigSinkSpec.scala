@@ -120,49 +120,60 @@ class ConfigSinkSpec extends SparkSuite {
 
   test("kinesis seam: fake transport receives the reference wire contract") {
     // the full frame contract of the reference Kinesis path
-    // (KinesisJob.java:53,66-77) across the seam, asserted on the WIRE
-    // bytes a transport plugin would hand to addUserRecord:
+    // (KinesisJob.java:53,66-77) across the agent's transport seam,
+    // asserted on the WIRE bytes a transport plugin would hand to
+    // addUserRecord:
     //   key   = host:path, untouched by the frame transform
     //   value = gzip(value) iff byte length strictly > threshold,
     //           else the raw UTF-8 bytes; receiver discriminates by
     //           magic-byte sniff, never out-of-band flags
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import java.nio.charset.StandardCharsets.UTF_8
-    val cfg = A2Config.fromProperties(base ++ kinesisKeys
+    val watched = tmpDir("kinesis-watched"); val work = tmpDir("kinesis-work")
+    val cfg = A2Config.fromProperties(base ++ kinesisKeys ++ Map(
+      "a2.watched.path" -> watched.toString, "a2.agent.work.dir" -> work.toString,
+      "a2.locked.file.query.interval" -> "100", "a2.settle.delay.ms" -> "100")
       - "a2.kafka.servers" - "a2.kafka.topic" - "a2.kafka.client.id")
     assert(cfg.kinesisSizeThreshold == 512) // reference default
-    val small = "<Audit>" + "a" * 100 + "</Audit>"
-    val exact = "x" * 512                   // == threshold: strict >, ships raw
-    val big = "<Audit>" + "y" * 600 + "</Audit>"
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(String, String)]
-    in.addData(
-      ("dbhost:/u01/audit/a.xml", small),
-      ("dbhost:/u01/audit/b.xml", exact),
-      ("dbhost:/u01/audit/c.xml", big))
+    // complete audit files whose shipped value (newlines stripped, R6)
+    // is below, exactly at (strict >, ships raw) and above the threshold
+    def doc(valueBytes: Int): String = {
+      val (head, tail) = ("<?xml version=\"1.0\"?>\n<Audit>\n<Sql_Text>", "</Sql_Text>\n</Audit>\n")
+      head + "x" * (valueBytes - (head + tail).replace("\n", "").length) + tail
+    }
+    val docs = Map("orcl_ora_301_1.xml" -> doc(120), "orcl_ora_302_2.xml" -> doc(512),
+      "orcl_ora_303_3.xml" -> doc(700))
+    val wire = docs.map { case (f, d) => f -> d.replace("\n", "").getBytes(UTF_8) }
+    assert(wire.values.map(_.length).toSet == Set(120, 512, 700))
+    docs.foreach { case (f, d) => Files.writeString(watched.resolve(f), d) }
+
     val received = scala.collection.concurrent.TrieMap.empty[String, Array[Byte]]
-    val q = ShipSinks.kinesisSeam(in.toDF().toDF("key", "value"), cfg,
-      tmpDir("kinesis-seam").toString, 50) { (frame, _) =>
+    val r = Agent.start(spark, cfg, kinesisTransport = Some { (frame, _) =>
       assert(frame.schema("value").dataType ==
         org.apache.spark.sql.types.BinaryType, "wire value must be BINARY")
       frame.select(col("key"), col("value")).as[(String, Array[Byte])]
         .collect().foreach { case (k, v) => received(k) = v }
+    })
+    try {
+      val t0 = System.currentTimeMillis()
+      while (received.size < docs.size && System.currentTimeMillis() - t0 < 30000)
+        Thread.sleep(100)
+    } finally Agent.stop(r, spark)
+    def wireOf(file: String): Array[Byte] = {
+      val keys = received.keys.filter(_.endsWith("/" + file)).toSeq
+      assert(keys.size == 1 && keys.head.startsWith(s"${Agent.hostName}:"), received.keys)
+      received(keys.head)
     }
-    q.processAllAvailable(); q.stop()
-    assert(received.keySet == Set("dbhost:/u01/audit/a.xml",
-      "dbhost:/u01/audit/b.xml", "dbhost:/u01/audit/c.xml"))
+    assert(received.size == docs.size, received.keys)
     // at/below threshold: byte-identical to value.getBytes(UTF-8)
-    assert(java.util.Arrays.equals(received("dbhost:/u01/audit/a.xml"),
-      small.getBytes(UTF_8)))
-    assert(java.util.Arrays.equals(received("dbhost:/u01/audit/b.xml"),
-      exact.getBytes(UTF_8)))
+    assert(java.util.Arrays.equals(wireOf("orcl_ora_301_1.xml"), wire("orcl_ora_301_1.xml")))
+    assert(java.util.Arrays.equals(wireOf("orcl_ora_302_2.xml"), wire("orcl_ora_302_2.xml")))
     // above: gzip container (magic sniff on the wire bytes) wrapping the
     // exact original UTF-8 payload
-    val wire = received("dbhost:/u01/audit/c.xml")
-    assert(Gzip.isCompressed(wire) &&
-      (wire(0) & 0xff) == 0x1f && (wire(1) & 0xff) == 0x8b)
-    assert(new String(Gzip.decompress(wire), UTF_8) == big)
+    val big = wireOf("orcl_ora_303_3.xml")
+    assert(Gzip.isCompressed(big) &&
+      (big(0) & 0xff) == 0x1f && (big(1) & 0xff) == 0x8b)
+    assert(java.util.Arrays.equals(Gzip.decompress(big), wire("orcl_ora_303_3.xml")))
   }
 
   test("kinesis identity/endpoint keys are typed and mandatory (KinesisSingleton parity)") {

@@ -26,7 +26,7 @@ class IngestLatencySpec extends SparkSuite {
     val ingest = tmpDir("lat_ingest"); val work = tmpDir("lat_work")
     val mirror = s"$work/mirror"; val dlq = s"$work/dlq"; val ckpt = s"$work/ckpt"
     val q = AuditIngest.startStream(spark, ingest.toString, mirror, dlq, ckpt,
-      host = "lathost", triggerMs = 500, deleteSource = false)
+      host = "lathost", triggerMs = 500)
     try {
       def deliver(name: String, bytes: Int, deadlineMs: Long): Long = {
         val tmp = Files.createTempFile("lat", ".tmp")
@@ -48,22 +48,22 @@ class IngestLatencySpec extends SparkSuite {
       // (NOTES.md), and a single sample flakes when the full suite runs
       // in parallel. Any one delivery inside the bound proves the
       // trigger→commit path meets it.
+      val window = new Bench.ContentionWindow
       val lats = (2 to 4).map(i => deliver(s"orcl_ora_90${i}_$i.xml", 1024 * 1024, 10000))
+      val witness = window.read().witness()
       info(s"steady-state ingest latency for 1 MB file: best ${lats.min} ms of $lats")
       // contended-host adjudication (the Bench cpu_s lesson applied to
       // the one latency SLA in the suite): best-of-3 at 4.7 s happened
-      // ONCE in-suite with the 1-min load average above cpus/4 and
-      // re-measured at ~1 s in isolation — on a loaded host this spec
-      // measures the host, not the trigger→commit path. Cancel (visible
-      // in the report, not a failure) instead of flaking; a quiet-host
-      // miss still fails hard.
-      val load = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      val cores = Runtime.getRuntime.availableProcessors()
+      // ONCE in-suite on a loaded host and re-measured at ~1 s in
+      // isolation — on a loaded host this spec measures the host, not
+      // the trigger→commit path. Cancel (visible in the report, not a
+      // failure) only when Bench's contention window over the three
+      // gate deliveries witnesses steal or other-process CPU; a
+      // quiet-host miss still fails hard.
       if (lats.min > 2000)
-        assume(load < cores / 4.0,
-          s"t-gate unmeasurable: best of 3 = ${lats.min} ms with 1-min " +
-            s"load $load >= ${cores / 4.0} — host contention, not the path")
+        assume(witness.isEmpty,
+          s"t-gate unmeasurable: best of 3 = ${lats.min} ms under " +
+            s"${witness.getOrElse("")} — host contention, not the path")
       assert(lats.min <= 2000, s"t-gate: best of 3 = ${lats.min} ms > 2000 ms")
       // ...and the median must stay within 2× the gate: best-of-3 alone
       // would pass a sustained regression on one lucky delivery; a 4 s
@@ -71,8 +71,8 @@ class IngestLatencySpec extends SparkSuite {
       // 500 ms-trigger path.
       val median = lats.sorted.apply(1)
       if (median > 4000)
-        assume(load < cores / 4.0,
-          s"t-gate median unmeasurable under 1-min load $load")
+        assume(witness.isEmpty,
+          s"t-gate median unmeasurable under ${witness.getOrElse("")}")
       assert(median <= 4000, s"t-gate: median of 3 = $median ms > 4000 ms")
     } finally q.stop()
   }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import graft.ingest.{AuditIngest, AuditModel, SettleGate}
+import graft.sinks.ShipSinks
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test of the ingest pipeline (SURVEY.md §5 item 3):
@@ -34,13 +35,19 @@ class IngestSpec extends SparkSuite {
     writeXml(raw, "orcl_ora_111_1.xml", complete = true)
     writeXml(raw, "orcl_ora_222_2.xml", complete = true)
     Files.writeString(raw.resolve("not_audit.txt"), "ignored")
+    // poison: a directory squats on this file's target name, so its
+    // rename fails on every tick — it must not stall the others
+    writeXml(raw, "orcl_ora_333_3.xml", complete = true)
+    Files.createDirectory(ingest.resolve("orcl_ora_333_3.xml"))
 
     // nothing settles when everything is too fresh
     val t0 = System.currentTimeMillis()
     assert(SettleGate.tick(raw, ingest, settleMs = 60000, now = () => t0).isEmpty)
-    // everything settles once the clock passes the settle window
+    // everything settles once the clock passes the settle window, and
+    // the poison file is skipped without failing the tick
     val moved = SettleGate.tick(raw, ingest, settleMs = 60000, now = () => t0 + 120000)
     assert(moved.toSet == Set("orcl_ora_111_1.xml", "orcl_ora_222_2.xml"))
+    assert(Files.exists(raw.resolve("orcl_ora_333_3.xml")))
     assert(Files.exists(raw.resolve("not_audit.txt"))) // non-xml untouched
     assert(!Files.exists(raw.resolve("orcl_ora_111_1.xml")))
     assert(Files.exists(ingest.resolve("orcl_ora_111_1.xml")))
@@ -137,6 +144,6 @@ class IngestSpec extends SparkSuite {
     assert(r.getAs[Boolean]("complete"))
     assert(r.getAs[String]("src_pid") == "555")
     // Q4: the kafka frame is exactly (key, value)
-    assert(AuditIngest.kafkaFrame(env).columns.toSeq == Seq("key", "value"))
+    assert(ShipSinks.frame(env).columns.toSeq == Seq("key", "value"))
   }
 }

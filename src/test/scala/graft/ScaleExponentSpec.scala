@@ -292,32 +292,12 @@ class ScaleExponentSpec extends SparkSuite with BeforeAndAfterAll {
       // phases would dilute a burst that hits only the timed draws
       // below the 1% bar (witness missed → spurious hard fail), and a
       // burst confined to fixture generation would witness-cancel a
-      // genuine breach measured on quiet draws. Witnesses are Bench's:
-      // steal_pct over the window, and other_cores = host busy CPU
-      // minus this JVM's own, both from /proc/stat — the 1-min loadavg
-      // alone is minutes-damped and misses bursts (and counts our own
-      // suite as load).
-      val (steal0, total0) = Bench.cpuJiffies()
-      val busy0 = Bench.hostBusyJiffies()
-      val self0 = Bench.processCpuSeconds()
-      val wallT0 = System.nanoTime()
-      def contentionWitness(): Option[String] = {
-        val (steal1, total1) = Bench.cpuJiffies()
-        val busy1 = Bench.hostBusyJiffies()
-        val self1 = Bench.processCpuSeconds()
-        val wall = (System.nanoTime() - wallT0) / 1e9
-        val stealPct =
-          if (total1 > total0) (steal1 - steal0).toDouble / (total1 - total0)
-          else 0.0
-        val otherCores =
-          if (busy0 < 0 || busy1 < 0 || self0 < 0 || self1 < 0 || wall <= 0) -1.0
-          else math.max(0.0, ((busy1 - busy0) / 100.0 - (self1 - self0)) / wall)
-        val bar = Runtime.getRuntime.availableProcessors() / 4.0
-        if (stealPct >= 0.01 || otherCores >= bar)
-          Some(f"steal ${stealPct * 100}%.1f%% (bar 1%%), other_cores " +
-            f"$otherCores%.1f (bar $bar%.1f) over ${wall}%.0f s")
-        else None
-      }
+      // genuine breach measured on quiet draws. The witness is Bench's
+      // contention window: steal_pct over the window, and other_cores =
+      // host busy CPU minus this JVM's own, both from /proc/stat — the
+      // 1-min loadavg alone is minutes-damped and misses bursts (and
+      // counts our own suite as load).
+      val window = new Bench.ContentionWindow
       var ts = dirs.map(minOf(name, _, samples))
       def fit(xs: Seq[Double]): (Double, Double, Double) = {
         val (d1, d2) = (xs(1) - xs(0), xs(2) - xs(1))
@@ -359,7 +339,7 @@ class ScaleExponentSpec extends SparkSuite with BeforeAndAfterAll {
       // known-polluted — CANCEL with the witness printed instead of
       // failing. No witness → the failure stands and means what it says.
       if (d1 < MinDeltaSec || d2 < MinDeltaSec || exp > ceiling)
-        contentionWitness().foreach { w =>
+        window.read().witness().foreach { w =>
           assume(false,
             f"$name exponent unmeasurable under host contention: $w " +
               f"($pts deltas=$d1%.2f/$d2%.2f exponent=$exp%.2f pin=$ceiling)")
