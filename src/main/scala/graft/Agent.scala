@@ -122,8 +122,9 @@ object Agent {
   }
 
   /** Graceful shutdown: stop the stream (flush parity with the
-    * reference's producer flush+close hook), halt the mover (joined, so
-    * no rename lands after this returns), unregister the MBean and listener.
+    * reference's producer flush+close hook), halt the mover (an
+    * interrupted tick starts no further move, so no rename lands after
+    * this returns), unregister the MBean and listener.
     */
   def stop(r: Running, spark: SparkSession): Unit = {
     Try(r.query.stop())

@@ -61,18 +61,19 @@ object Bench {
     */
   final case class Contention(wallS: Double, stealPct: Double, otherCores: Double,
                               selfCpuS: Double) {
-    /** Evidence of contention (steal ≥ 1 %, or otherCores ≥ barCores). */
-    def witness(barCores: Double = Runtime.getRuntime.availableProcessors() / 4.0): Option[String] =
+    /** Evidence of contention: steal ≥ 1 %, or other work on ≥ cpus/4 cores. */
+    def witness(): Option[String] = {
+      val barCores = Runtime.getRuntime.availableProcessors() / 4.0
       Option.when(stealPct >= 0.01 || otherCores >= barCores)(
         f"steal ${stealPct * 100}%.1f%% (bar 1%%), other_cores " +
           f"$otherCores%.1f (bar $barCores%.1f) over $wallS%.1f s")
+    }
   }
 
   /** The one host-contention witness, from counters taken when the window
-    * opens. Steal is what `ps` cannot see (the round-13 spreads happened
-    * with nothing else runnable in the guest); other-process cores move at
-    * window granularity, where the 1-min loadavg is minutes-damped, misses
-    * a short burst and counts this process as load (round-18 advice).
+    * opens: steal (what `ps` cannot see) and other-process cores at window
+    * granularity (the 1-min loadavg is minutes-damped, misses a short burst
+    * and counts this process as load — round-18 advice).
     */
   final class ContentionWindow {
     private val (jiffies0, self0, t0) = (cpuJiffies(), processCpuSeconds(), System.nanoTime())

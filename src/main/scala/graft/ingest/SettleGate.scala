@@ -90,16 +90,16 @@ object SettleGate {
       }.getOrElse(false)
   }
 
-  /** Source files whose move has failed, so each is logged once. */
+  /** Source files whose last move failed, so each failure is logged once;
+    * a file leaves the set when it moves or goes away. */
   private val unmovable = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
   /** One mover tick: move every settled `*.xml` from rawDir → ingestDir.
-    * Returns the moved file names. A file is settled once untouched for
-    * settleMs (the mtime gate, which always applies); `lockChecker` is
-    * consulted only when a PID can be parsed from the name (reference
-    * parity). A file whose move fails is skipped — logged the first
-    * time — and the rest of the tick goes on, so one poison file cannot
-    * stall every file listed after it.
+    * Returns the moved file names. `lockChecker` is consulted only when a
+    * PID can be parsed from the name (reference parity); the mtime settle
+    * gate always applies. A file whose move fails is skipped (logged once
+    * until it moves or goes away) so it cannot stall the files after it;
+    * once the calling thread is interrupted no further move starts.
     */
   def tick(rawDir: Path, ingestDir: Path, settleMs: Long,
            lockChecker: Option[LockChecker] = None,
@@ -116,9 +116,11 @@ object SettleGate {
               .forall(pid => !lc.isLocked(pid, f.toString))
           }
         }
+        .takeWhile(_ => !Thread.currentThread().isInterrupted)
         .flatMap { f =>
           try {
             Files.move(f, ingestDir.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+            unmovable.remove(f)
             Some(f.getFileName.toString)
           } catch {
             case e: java.io.IOException =>
@@ -129,7 +131,7 @@ object SettleGate {
           }
         }
         .toSeq
-    } finally stream.close()
+    } finally { stream.close(); unmovable.removeIf(f => !Files.exists(f)) }
   }
 
   /** Background mover thread with the reference's scheduling shape

@@ -6,15 +6,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sink surface (reference R11 Kafka / R12 Kinesis / Q4-Q5): every sink
-  * consumes the canonical `(key, value)` frame the ingest envelope
-  * produces, and every frame leaves through one place — the arms of
-  * `graft.Agent.start`'s `foreachBatch` ship function, behind the settle
-  * gate and the DLQ split of `AuditIngest.startStream`.
+  * consumes the canonical `(key, value)` frame, and every frame leaves
+  * through the arms of `graft.Agent.start`'s ship function, behind the
+  * settle gate and the DLQ split of `AuditIngest.startStream`.
   *
-  * - Kafka: the built-in `format("kafka")` batch writer per micro-batch;
-  *   all `a2.kafka.*` keys pass through 1:1 (reference
-  *   KafkaSingleton.java:65-139 — producer config incl.
-  *   compression.type=gzip default).
+  * - Kafka: the built-in `format("kafka")` batch writer; all `a2.kafka.*`
+  *   keys pass through 1:1 (reference KafkaSingleton.java:65-139 —
+  *   producer config incl. compression.type=gzip default).
   * - Kinesis: no connector offline (reference KinesisJob/KinesisSingleton);
   *   the record-level transform (R9 conditional gzip above the 512-byte
   *   threshold, KinesisJob.java:66-73) is real and tested, the transport

@@ -43,6 +43,13 @@ class IngestSpec extends SparkSuite {
     // nothing settles when everything is too fresh
     val t0 = System.currentTimeMillis()
     assert(SettleGate.tick(raw, ingest, settleMs = 60000, now = () => t0).isEmpty)
+    // an interrupted caller (a mover being stopped) starts no move
+    Thread.currentThread().interrupt()
+    val whileInterrupted =
+      try SettleGate.tick(raw, ingest, settleMs = 60000, now = () => t0 + 120000)
+      finally Thread.interrupted()
+    assert(whileInterrupted.isEmpty)
+    assert(Files.exists(raw.resolve("orcl_ora_111_1.xml")))
     // everything settles once the clock passes the settle window, and
     // the poison file is skipped without failing the tick
     val moved = SettleGate.tick(raw, ingest, settleMs = 60000, now = () => t0 + 120000)
@@ -51,6 +58,10 @@ class IngestSpec extends SparkSuite {
     assert(Files.exists(raw.resolve("not_audit.txt"))) // non-xml untouched
     assert(!Files.exists(raw.resolve("orcl_ora_111_1.xml")))
     assert(Files.exists(ingest.resolve("orcl_ora_111_1.xml")))
+    // once the squatter is gone the poison file moves on the next tick
+    Files.delete(ingest.resolve("orcl_ora_333_3.xml"))
+    assert(SettleGate.tick(raw, ingest, settleMs = 60000, now = () => t0 + 120000) ==
+      Seq("orcl_ora_333_3.xml"))
   }
 
   test("streaming ingest: mirror complete, DLQ truncated, delete source, idempotent restart") {
