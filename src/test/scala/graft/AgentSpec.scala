@@ -84,6 +84,7 @@ class AgentSpec extends SparkSuite {
       val mbs = ManagementFactory.getPlatformMBeanServer
       assert(await()(mbs.getAttribute(r.mbean, "FilesCount").asInstanceOf[Long] >= 3L))
       assert(mbs.getAttribute(r.mbean, "FilesSize").asInstanceOf[Long] > 0L)
+      assert(mbs.getAttribute(r.mbean, "DlqCount").asInstanceOf[Long] == 1L) // the truncated file
       assert(mbs.getAttribute(r.mbean, "ElapsedTime").asInstanceOf[String].contains("sec."))
       assert(mbs.getAttribute(r.mbean, "TransferTime").asInstanceOf[String].contains("min"))
     } finally Agent.stop(r, spark)

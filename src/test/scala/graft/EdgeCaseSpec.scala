@@ -119,12 +119,9 @@ class EdgeCaseSpec extends SparkSuite {
         java.nio.file.Paths.get(s"$dir/$t.parquet"),
         java.nio.file.Paths.get(s"${sf()}/$t.parquet"))
     }
-    // derive the events-backed set the same way EventsTsSpec does: from
-    // each entry's own scan set at the fixture dir
-    val affected = graft.queries.Catalog.all.keys.filter { name =>
-      graft.queries.Catalog.all(name).build(spark, sf())
-        .inputFiles.exists(_.contains("events.parquet"))
-    }.toSeq
+    // the events-backed set EventsTsSpec guards, scan sets walked
+    // through cached plans
+    val affected = EventsEntries(spark, sf())
     assert(affected.size >= 20, s"derivation went vacuous: $affected")
     // entries whose output is ∝ event data must come back EMPTY; the
     // rest (funnel/summary shapes that emit fixed-grain rows from

@@ -15,50 +15,6 @@ import org.apache.spark.sql.types._
   */
 class EventsTsSpec extends SparkSuite {
 
-  /** Every catalog entry that reads the events table, DERIVED from each
-    * query's own scan set (`DataFrame.inputFiles`) rather than a
-    * hand-maintained list — a new events-backed query is covered the
-    * moment it lands in the catalog, so the guard can't silently rot
-    * (round-9's manual list had already missed q156–q162). Building a
-    * catalog entry runs any driver-side model fits it carries, but at
-    * sf0.001 those are milliseconds; nothing here executes the final
-    * query itself.
-    */
-  private def eventsQueries: Seq[String] = {
-    // `Dataset.inputFiles` stops at InMemoryRelation leaves, and since
-    // round 16 many entries persist a reduced intermediate — the scan
-    // set must be collected THROUGH cached plans or persist-carrying
-    // events queries (q142, q162, …) silently leave the guard.
-    def physFiles(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
-      p.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.inputFiles.toSeq
-        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          physFiles(im.relation.cachedPlan)
-        // AdaptiveSparkPlanExec is a LEAF node — collect() cannot
-        // descend into the plan it wraps (every cachedPlan is one)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          physFiles(a.inputPlan)
-      }.flatten
-    def logiFiles(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] =
-      p.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.inputFiles.toSeq
-            case _ => Nil
-          }
-        case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          physFiles(imr.cachedPlan)
-      }.flatten
-    queries.Catalog.all.toSeq.collect {
-      case (name, q)
-          if logiFiles(q.build(spark, sf()).queryExecution.optimizedPlan)
-            .exists(_.contains("events.parquet")) =>
-        name
-    }
-  }
-
   test("every events-touching catalog query is identical over both ts encodings") {
     import java.nio.file._
     val src = Paths.get(sf())
@@ -96,7 +52,7 @@ class EventsTsSpec extends SparkSuite {
         .repartition(1).write.parquet(out.toString)
     }
 
-    val derived = eventsQueries
+    val derived = EventsEntries(spark, sf())
     // the derivation must at minimum rediscover the long-standing core
     // (a refactor of Tables/inputFiles that broke it would empty the list
     // and make the whole spec vacuously green)

@@ -122,6 +122,55 @@ class IngestSpec extends SparkSuite {
       .collect().toSet == Set("SCOTT", "HR"))
   }
 
+  test("a batch over Spark's parallel-listing threshold is listed on the driver, each file once") {
+    // a fresh session: the threshold starts at Spark's default of 32
+    val s = spark.newSession()
+    val listingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert(s.conf.get(listingThreshold) == "32")
+    val ingest = tmpDir("listing_in"); val mirror = tmpDir("listing_mir")
+    val dlq = tmpDir("listing_dlq"); val ckpt = tmpDir("listing_ckpt")
+    val names = (1 to 40).map(i => s"orcl_ora_${1000 + i}_$i.xml")
+    names.zipWithIndex.foreach { case (n, i) => writeXml(ingest, n, complete = i >= 2) }
+
+    // every job description the session's context starts; a marker job
+    // run after the stream proves every earlier event was delivered
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val q = AuditIngest.startStream(s, ingest.toString, mirror.toString,
+        dlq.toString, ckpt.toString, Host, triggerMs = 100)
+      try q.processAllAvailable() finally q.stop()
+      s.sparkContext.setJobDescription("listing-pin-marker")
+      try s.sparkContext.parallelize(Seq(1), 1).count()
+      finally s.sparkContext.setJobDescription(null)
+      val t0 = System.currentTimeMillis()
+      while (!descriptions.contains("listing-pin-marker") && System.currentTimeMillis() - t0 < 30000)
+        Thread.sleep(20)
+      assert(descriptions.contains("listing-pin-marker"), "listener never saw the marker job")
+    } finally s.sparkContext.removeSparkListener(listener)
+
+    val listings = descriptions.toArray(Array.empty[String]).toSeq
+      .filter(d => d.startsWith("Listing leaf files") && d.contains(ingest.getFileName.toString))
+    assert(listings.isEmpty, s"a batch's files were listed by a Spark job: $listings")
+    def files(dir: Path): Seq[String] = s.read.parquet(dir.toString)
+      .select("src_file").collect().map(_.getString(0).split('/').last).toSeq
+    val (shipped, dead) = (files(mirror), files(dlq))
+    assert(shipped.size == 38 && shipped.toSet == names.drop(2).toSet, s"mirror: $shipped")
+    assert(dead.size == 2 && dead.toSet == names.take(2).toSet, s"DLQ: $dead")
+    assert(s.conf.get(listingThreshold) == "512") // startStream's maxFilesPerTrigger
+
+    // a caller's higher threshold is kept
+    s.conf.set(listingThreshold, 4096L)
+    AuditIngest.startStream(s, ingest.toString, mirror.toString,
+      dlq.toString, ckpt.toString, Host, triggerMs = 100).stop()
+    assert(s.conf.get(listingThreshold) == "4096")
+  }
+
   test("ingest latency: file appearance → mirror commit (BASELINE target ≤ 2 s)") {
     val ingest = tmpDir("lat_in"); val mirror = tmpDir("lat_mir")
     val dlq = tmpDir("lat_dlq"); val ckpt = tmpDir("lat_ckpt")
