@@ -137,6 +137,18 @@ object AuditIngest {
     * scoped to `start()` and stays set after the call, like the conf
     * `Tables` sets. How files are listed never changes which rows come
     * out.
+    *
+    * Each batch runs in one wave: it is coalesced to the session's
+    * `defaultParallelism` before it is persisted, so the mirror (or
+    * `ship`) write has at most one task per slot, and the DLQ write is
+    * coalesced to one task that writes one file. Spark charges a file
+    * its 4 MB open cost when it splits a scan, so a 512-file backlog of
+    * small files planned 17 read partitions: 17 mirror tasks in 5 waves
+    * on 4 slots, then 17 mostly empty DLQ tasks, each deserializing the
+    * Hadoop conf and committing its own file (`addBatch` 1.4-1.5 s of a
+    * 1.6-1.8 s batch). Coalescing, not a lower
+    * `spark.sql.files.openCostInBytes`, keeps the caller's session
+    * unchanged for every other scan (NOTES.md "Architecture decisions").
     */
   def startStream(
       spark: SparkSession,
@@ -148,6 +160,8 @@ object AuditIngest {
     val listingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     if (spark.conf.get(listingThreshold).toInt < maxFilesPerTrigger)
       spark.conf.set(listingThreshold, maxFilesPerTrigger.toLong)
+
+    val slots = spark.sparkContext.defaultParallelism
 
     val raw = spark.readStream.format("text")
       .option("wholetext", "true")
@@ -171,13 +185,14 @@ object AuditIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
+        val b = batch.coalesce(slots).persist()
         try {
           val complete = b.filter(col("complete")).drop("complete")
           ship.getOrElse(ShipSinks.overwriteBatch(_, mirrorDir, _))(complete, batchId)
           ShipSinks.overwriteBatch(
             b.filter(!col("complete"))
-              .withColumn("reason", lit("incomplete: missing </Audit> terminator")),
+              .withColumn("reason", lit("incomplete: missing </Audit> terminator"))
+              .coalesce(1),
             dlqDir, batchId)
         } finally b.unpersist()
         ()

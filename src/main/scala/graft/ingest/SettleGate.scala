@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
+import scala.util.control.NonFatal
 
 /** The "file closed?" gate (reference R5). Spark's file source commits a
   * file on *discovery*; the reference ships only on *writer close*
@@ -90,6 +91,8 @@ object SettleGate {
       }.getOrElse(false)
   }
 
+  private val log = org.apache.log4j.Logger.getLogger(getClass)
+
   /** Source files whose last move failed, so each failure is logged once;
     * a file leaves the set when it moves or goes away. */
   private val unmovable = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
@@ -125,8 +128,7 @@ object SettleGate {
           } catch {
             case e: java.io.IOException =>
               if (unmovable.add(f))
-                org.apache.log4j.Logger.getLogger(getClass)
-                  .warn(s"settle gate cannot move $f into $ingestDir, skipping it: $e")
+                log.warn(s"settle gate cannot move $f into $ingestDir, skipping it: $e")
               None
           }
         }
@@ -134,18 +136,41 @@ object SettleGate {
     } finally { stream.close(); unmovable.removeIf(f => !Files.exists(f)) }
   }
 
-  /** Background mover thread with the reference's scheduling shape
-    * (scheduleWithFixedDelay, initial 256 ms — OraaudKafka.java:248-259).
-    * An interrupt ends the loop.
+  /** Background mover. The reference schedules its mover with
+    * scheduleWithFixedDelay and an initial 256 ms delay
+    * (OraaudKafka.java:248-259); that delay is not copied. The first tick
+    * runs on the caller's thread before the thread starts, and the loop
+    * sleeps `pollMs` before each later tick. `Agent.start` starts the
+    * mover before the stream, so a backlog already settled at start is
+    * in `ingestDir` when the stream first lists it and ships in batch 0;
+    * with the delay, the stream's first trigger found `ingestDir` empty
+    * and the backlog waited for the next trigger (a 512-file backlog's
+    * batch started 0.3-0.5 s after `Agent.start` was called, against
+    * 0.13-0.14 s without it, on 4 cores).
+    *
+    * A tick that fails as a whole (the watched dir deleted or unreadable)
+    * moves nothing and logs a warning; the gate keeps polling and warns
+    * again only after a tick has succeeded in between. An interrupt ends
+    * the loop.
     */
   def startMover(rawDir: Path, ingestDir: Path, settleMs: Long, pollMs: Long,
                  lockChecker: Option[LockChecker] = None): Thread = {
+    var failing = false // the caller's tick happens-before Thread.start
+    def guardedTick(): Unit =
+      try { tick(rawDir, ingestDir, settleMs, lockChecker); failing = false }
+      catch {
+        case NonFatal(e) =>
+          if (!failing)
+            log.warn(s"settle gate cannot move files from $rawDir into $ingestDir, " +
+              s"retrying every $pollMs ms: $e")
+          failing = true
+      }
+    guardedTick()
     val t = new Thread(() => {
       try {
-        Thread.sleep(256)
         while (!Thread.currentThread().isInterrupted) {
-          Try(tick(rawDir, ingestDir, settleMs, lockChecker))
           Thread.sleep(pollMs)
+          guardedTick()
         }
       } catch { case _: InterruptedException => () }
     }, "settle-gate-mover")

@@ -4,6 +4,8 @@ import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import graft.config.A2Config
 import graft.ingest.SettleGate
 import org.apache.spark.sql.functions._
@@ -46,15 +48,6 @@ class AgentSpec extends SparkSuite {
     f
   }
 
-  private def await(deadlineMs: Long = 30000)(cond: => Boolean): Boolean = {
-    val t0 = System.currentTimeMillis()
-    var ok = cond
-    while (!ok && System.currentTimeMillis() - t0 < deadlineMs) {
-      Thread.sleep(100); ok = cond
-    }
-    ok
-  }
-
   test("mirror agent: conf file → settle gate → mirror, MBean metrics, graceful stop") {
     val watched = tmpDir("agent_watched"); val work = tmpDir("agent_work")
     writeXml(watched, "orcl_ora_101_1.xml")
@@ -68,7 +61,7 @@ class AgentSpec extends SparkSuite {
     r.mover.setUncaughtExceptionHandler((_, e) => moverFailures.add(e))
     try {
       def mirrorCount = Try2(spark.read.parquet(cfg.mirrorDir).count()).getOrElse(0L)
-      assert(await()(mirrorCount == 2), "complete files never reached the mirror")
+      assert(await(mirrorCount == 2), "complete files never reached the mirror")
 
       val m = spark.read.parquet(cfg.mirrorDir)
       val row = m.filter(col("src_pid") === "101").select("key", "value").head()
@@ -78,11 +71,11 @@ class AgentSpec extends SparkSuite {
       assert(!row.getString(1).contains("\n")) // R6 newline strip
 
       // truncated file lands in the DLQ, not the mirror
-      assert(await()(Try2(spark.read.parquet(cfg.dlqDir).count()).getOrElse(0L) == 1))
+      assert(await(Try2(spark.read.parquet(cfg.dlqDir).count()).getOrElse(0L) == 1))
 
       // R15: the registered MBean serves the reference's attribute surface
       val mbs = ManagementFactory.getPlatformMBeanServer
-      assert(await()(mbs.getAttribute(r.mbean, "FilesCount").asInstanceOf[Long] >= 3L))
+      assert(await(mbs.getAttribute(r.mbean, "FilesCount").asInstanceOf[Long] >= 3L))
       assert(mbs.getAttribute(r.mbean, "FilesSize").asInstanceOf[Long] > 0L)
       assert(mbs.getAttribute(r.mbean, "DlqCount").asInstanceOf[Long] == 1L) // the truncated file
       assert(mbs.getAttribute(r.mbean, "ElapsedTime").asInstanceOf[String].contains("sec."))
@@ -95,6 +88,26 @@ class AgentSpec extends SparkSuite {
     assert(!ManagementFactory.getPlatformMBeanServer.isRegistered(r.mbean))
   }
 
+  test("a backlog already settled at start is in the settled dir when start returns") {
+    val watched = tmpDir("agent_backlog"); val work = tmpDir("agent_backlog_work")
+    val names = (1 to 20).map(i => s"orcl_ora_${300 + i}_$i.xml")
+    val past = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000)
+    names.foreach { n => writeXml(watched, n); Files.setLastModifiedTime(watched.resolve(n), past) }
+    val cfg = A2Config.fromFile(confFile(watched, work, "mirror").toString)
+    val r = Agent.start(spark, cfg)
+    try {
+      // the mover's first tick runs inside start, before the stream's
+      // first trigger lists the settled dir
+      def list(dir: String): Set[String] = {
+        val s = Files.list(Paths.get(dir))
+        try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+      }
+      assert(list(watched.toString).isEmpty, s"left in the watched dir: ${list(watched.toString)}")
+      assert(names.toSet.subsetOf(list(cfg.settledDir)), s"settled: ${list(cfg.settledDir)}")
+      assert(await(Try2(spark.read.parquet(cfg.mirrorDir).count()).getOrElse(0L) == names.size))
+    } finally Agent.stop(r, spark)
+  }
+
   test("kinesis agent: seam receives the conditional-gzip binary frame") {
     val watched = tmpDir("agent_kin"); val work = tmpDir("agent_kin_work")
     writeXml(watched, "orcl_ora_201_1.xml")                 // ~280 B < threshold
@@ -102,7 +115,7 @@ class AgentSpec extends SparkSuite {
     val cfg = A2Config.fromFile(confFile(watched, work, "kinesis").toString)
     val r = Agent.start(spark, cfg) // default transport = parquet mirror of the frame
     try {
-      assert(await() {
+      assert(await {
         Try2(spark.read.parquet(cfg.mirrorDir).count()).getOrElse(0L) == 2L
       })
       def frame(file: String): Array[Byte] =

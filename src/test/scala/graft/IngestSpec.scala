@@ -1,9 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import graft.ingest.{AuditIngest, AuditModel, SettleGate}
 import graft.sinks.ShipSinks
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test of the ingest pipeline (SURVEY.md §5 item 3):
@@ -28,6 +39,33 @@ class IngestSpec extends SparkSuite {
         |""".stripMargin
     val text = if (complete) body else body.substring(0, body.length / 2)
     Files.writeString(dir.resolve(name), text)
+  }
+
+  /** Run `body` with `listener` on `s`'s context. Returns once the
+    * listener has heard every event `body` caused: a marker listener
+    * registered after it sees a marker job run after `body`, and the
+    * listener bus delivers each event to its listeners in registration
+    * order.
+    */
+  private def listening(s: SparkSession, listener: SparkListener)(body: => Unit): Unit = {
+    val marked = new CountDownLatch(1)
+    val marker = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "listener-marker"))
+          marked.countDown()
+    }
+    s.sparkContext.addSparkListener(listener)
+    s.sparkContext.addSparkListener(marker)
+    try {
+      body
+      s.sparkContext.setJobDescription("listener-marker")
+      try s.sparkContext.parallelize(Seq(1), 1).count()
+      finally s.sparkContext.setJobDescription(null)
+      assert(marked.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
+    } finally {
+      s.sparkContext.removeSparkListener(marker)
+      s.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("settle gate moves only settled xml files, atomically") {
@@ -62,6 +100,44 @@ class IngestSpec extends SparkSuite {
     Files.delete(ingest.resolve("orcl_ora_333_3.xml"))
     assert(SettleGate.tick(raw, ingest, settleMs = 60000, now = () => t0 + 120000) ==
       Seq("orcl_ora_333_3.xml"))
+  }
+
+  test("a mover whose ticks fail warns once, and again only after a tick succeeds") {
+    val warnings = new ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("settle-gate-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    // a logger config of the test's own, at WARN whatever the root level
+    val ctx = LoggerContext.getContext(false)
+    val name = SettleGate.getClass.getName
+    val loggerConfig = new LoggerConfig(name, Level.WARN, false)
+    loggerConfig.addAppender(capture, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, loggerConfig)
+    ctx.updateLoggers()
+    val raw = tmpDir("gone_raw"); val ingest = tmpDir("gone_ingest")
+    val mover = SettleGate.startMover(raw, ingest, settleMs = 0, pollMs = 20)
+    try {
+      Files.delete(raw)
+      assert(await(warnings.size == 1), "a failing tick logged nothing")
+      assert(warnings.peek().contains(raw.toString), warnings.peek())
+      Thread.sleep(300) // about 15 more failing ticks
+      assert(warnings.size == 1, s"each failing tick warned: $warnings")
+      // a tick that succeeds re-arms the warning
+      Files.createDirectory(raw)
+      writeXml(raw, "orcl_ora_1_1.xml", complete = true)
+      assert(await(Files.exists(ingest.resolve("orcl_ora_1_1.xml"))), "mover never recovered")
+      Files.delete(raw)
+      assert(await(warnings.size == 2), s"a second failure after a success logged nothing: $warnings")
+      Thread.sleep(300)
+      assert(warnings.size == 2, s"each failing tick warned: $warnings")
+    } finally {
+      mover.interrupt(); mover.join(5000)
+      ctx.getConfiguration.removeLogger(name); ctx.updateLoggers(); capture.stop()
+    }
+    assert(!mover.isAlive)
   }
 
   test("streaming ingest: mirror complete, DLQ truncated, delete source, idempotent restart") {
@@ -132,27 +208,17 @@ class IngestSpec extends SparkSuite {
     val names = (1 to 40).map(i => s"orcl_ora_${1000 + i}_$i.xml")
     names.zipWithIndex.foreach { case (n, i) => writeXml(ingest, n, complete = i >= 2) }
 
-    // every job description the session's context starts; a marker job
-    // run after the stream proves every earlier event was delivered
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    // every job description the session's context starts
+    val descriptions = new ConcurrentLinkedQueue[String]
+    listening(s, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
           .foreach(descriptions.add)
-    }
-    s.sparkContext.addSparkListener(listener)
-    try {
+    }) {
       val q = AuditIngest.startStream(s, ingest.toString, mirror.toString,
         dlq.toString, ckpt.toString, Host, triggerMs = 100)
       try q.processAllAvailable() finally q.stop()
-      s.sparkContext.setJobDescription("listing-pin-marker")
-      try s.sparkContext.parallelize(Seq(1), 1).count()
-      finally s.sparkContext.setJobDescription(null)
-      val t0 = System.currentTimeMillis()
-      while (!descriptions.contains("listing-pin-marker") && System.currentTimeMillis() - t0 < 30000)
-        Thread.sleep(20)
-      assert(descriptions.contains("listing-pin-marker"), "listener never saw the marker job")
-    } finally s.sparkContext.removeSparkListener(listener)
+    }
 
     val listings = descriptions.toArray(Array.empty[String]).toSeq
       .filter(d => d.startsWith("Listing leaf files") && d.contains(ingest.getFileName.toString))
@@ -169,6 +235,55 @@ class IngestSpec extends SparkSuite {
     AuditIngest.startStream(s, ingest.toString, mirror.toString,
       dlq.toString, ckpt.toString, Host, triggerMs = 100).stop()
     assert(s.conf.get(listingThreshold) == "4096")
+  }
+
+  test("a backlog batch runs in one wave: mirror tasks ≤ slots, one DLQ task and file") {
+    // 200 small files: Spark's 4 MB per-file open cost alone plans 7 read
+    // partitions, more than the 4 slots
+    val s = spark.newSession()
+    val slots = s.sparkContext.defaultParallelism
+    val ingest = tmpDir("wave_in"); val mirror = tmpDir("wave_mir")
+    val dlq = tmpDir("wave_dlq"); val ckpt = tmpDir("wave_ckpt")
+    val names = (1 to 200).map(i => s"orcl_ora_${2000 + i}_$i.xml")
+    val truncated = names.filter(_.endsWith("7.xml")).take(5).toSet
+    names.foreach(n => writeXml(ingest, n, complete = !truncated(n)))
+
+    // the write each stage served, by the output dir in its SQL plan
+    val plans = new ConcurrentHashMap[Long, String]
+    val stageExecution = new ConcurrentHashMap[Int, Long]
+    val stageTasks = new ConcurrentHashMap[Int, Int]
+    listening(s, new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.put(x.executionId, x.physicalPlanDescription)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => e.stageInfos.foreach(i => stageExecution.put(i.stageId, id.toLong)))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+    }) {
+      val q = AuditIngest.startStream(s, ingest.toString, mirror.toString,
+        dlq.toString, ckpt.toString, Host, triggerMs = 100)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def tasksWriting(dir: Path): Seq[Int] = stageTasks.asScala.toSeq.collect {
+      case (stage, n) if Option(stageExecution.get(stage))
+          .flatMap(id => Option(plans.get(id))).exists(_.contains(dir.getFileName.toString)) => n
+    }
+    val (mirrorStages, dlqStages) = (tasksWriting(mirror), tasksWriting(dlq))
+    assert(mirrorStages.nonEmpty && mirrorStages.forall(_ <= slots),
+      s"mirror stages' tasks $mirrorStages over $slots slots")
+    assert(dlqStages.sum == 1, s"DLQ stages' tasks $dlqStages")
+    val dlqFiles = Files.list(dlq.resolve("batch=0"))
+    try assert(dlqFiles.iterator().asScala.count(_.toString.endsWith(".parquet")) == 1)
+    finally dlqFiles.close()
+
+    def files(dir: Path): Seq[String] = s.read.parquet(dir.toString)
+      .select("src_file").collect().map(_.getString(0).split('/').last).toSeq
+    val (shipped, dead) = (files(mirror), files(dlq))
+    assert(shipped.sorted == names.filterNot(truncated).sorted, s"mirror: $shipped")
+    assert(dead.sorted == truncated.toSeq.sorted, s"DLQ: $dead")
   }
 
   test("ingest latency: file appearance → mirror commit (BASELINE target ≤ 2 s)") {

@@ -19,6 +19,16 @@ trait SparkSuite extends AnyFunSuite {
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Polls `cond` every 100 ms for up to 30 s; its last value. */
+  def await(cond: => Boolean): Boolean = {
+    val t0 = System.currentTimeMillis()
+    var ok = cond
+    while (!ok && System.currentTimeMillis() - t0 < 30000) {
+      Thread.sleep(100); ok = cond
+    }
+    ok
+  }
+
   def tmpDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     p.toFile.deleteOnExit()
